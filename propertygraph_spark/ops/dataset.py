@@ -500,10 +500,12 @@ def alpha_sample(docs: DataFrame, alpha_budget: int = 300,
            .when(s0 * s0 > F.col("n_docs"), s0 - 1).otherwise(s0))
     per = per.withColumn("isqrt_docs", isq.cast("long"))
     tot = per.agg(F.sum("isqrt_docs").alias("t")).collect()[0]["t"]
+    # an empty corpus has no strata (sum is NULL): the rate expression
+    # then runs over no rows and the allocation table comes back empty
     keep = F.least(
         F.lit(1_000_000).cast("long"),
         F.expr(f"{alpha_budget} * isqrt_docs * 1000000"
-               f" div ({int(tot)} * n_docs)"))
+               f" div ({int(tot or 1)} * n_docs)"))
     per = per.withColumn("keep_ppm", keep.cast("long"))
     coin = F.pmod(F.conv(F.substring(F.md5(F.col("doc_id")
                                            .cast("string")), 1, 12),

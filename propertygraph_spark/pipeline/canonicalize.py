@@ -17,6 +17,8 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
+from .session import local_frame
+
 # Telemetry of the most recent connected_components call (VERDICT r4 #4:
 # the dedup_clusters 1x->2x scaling point needed per-round evidence to
 # separate CC convergence cost from host noise). Overwritten per call;
@@ -71,7 +73,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         rows = [(x, find(x)) for x in parent]
         schema = edges.select(F.col(src).alias("id"),
                               F.col(src).alias("component")).schema
-        return edges.sparkSession.createDataFrame(rows, schema)
+        return local_frame(edges.sparkSession, rows, schema)
 
     sym = (edges.selectExpr(f"{src} as a", f"{dst} as b")
            .unionByName(edges.selectExpr(f"{dst} as a", f"{src} as b"))

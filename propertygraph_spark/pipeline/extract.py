@@ -112,7 +112,14 @@ def _kernel(batches, graphs=("ast", "cfg", "pdg")) -> Iterator:
     column-wise per row_kind from the kernel's own columnar form (no
     per-row dicts anywhere on this path — the pandas-object detour costs
     ~1.6x the kernel itself at 32 cores, and even the dict-row detour
-    paid one dict build plus one per-column re-scan per row)."""
+    paid one dict build plus one per-column re-scan per row).
+
+    Each input batch also yields one ``metric`` row with text
+    ``docs=<n> rows=<n> sec=<s>``. It is run telemetry, never written
+    to disk: ``materialize.extract_incremental`` observes these rows
+    during its write job and ``run_pipeline`` records their typed sum
+    as ``kernel: {batches, docs, rows, sec}`` in
+    ``_metrics/pipeline.json``."""
     # heavy import inside the worker, once per python worker
     from propertygraph_spark.kernel.extract import (MENTION_COLS_K,
                                                     NODE_COLS_K,

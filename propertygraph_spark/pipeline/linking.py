@@ -23,6 +23,8 @@ from typing import List, Tuple
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (DoubleType, StringType, StructField, StructType)
 
+from .session import local_frame
+
 DICT_SCHEMA = StructType([
     StructField("fqn", StringType(), False),
     StructField("simple_name", StringType(), False),
@@ -77,7 +79,7 @@ def symbol_dictionary(spark: SparkSession, n_symbols: int = 2000,
     """Deterministic symbol dictionary with Zipf-ish weights; head keys are
     made deliberately hot, and the synthetic corpus' method/class names are
     included so linking produces matches."""
-    return spark.createDataFrame(symbol_rows(n_symbols, seed), DICT_SCHEMA)
+    return local_frame(spark, symbol_rows(n_symbols, seed), DICT_SCHEMA)
 
 
 def corpus_symbol_table(mentions: DataFrame) -> DataFrame:
@@ -107,6 +109,17 @@ def corpus_symbol_table(mentions: DataFrame) -> DataFrame:
                  F.min("decl_fqn").alias("decl_fqn"))
             .filter(F.col("n_fqns") == 1)
             .select("recv_simple", "decl_fqn"))
+
+
+def driver_symbol_table(mentions: DataFrame) -> Tuple[list, DataFrame]:
+    """``corpus_symbol_table`` collected to the driver: its sorted
+    (recv_simple, decl_fqn) rows, for fingerprinting, and the same rows
+    as an Arrow-backed ``LocalRelation`` for the broadcast join in
+    ``qualify_cross_file`` (one collect job; the table is broadcast-scale
+    by construction)."""
+    table = corpus_symbol_table(mentions)
+    rows = sorted((r["recv_simple"], r["decl_fqn"]) for r in table.collect())
+    return rows, local_frame(mentions.sparkSession, rows, table.schema)
 
 
 # static-receiver call form the kernel could NOT qualify: one uppercase

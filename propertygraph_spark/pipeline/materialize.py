@@ -21,6 +21,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .session import local_frame
+
 N_BUCKETS_DEFAULT = 32
 _LOGIC_VERSION = "1"  # bump to invalidate all stage checkpoints
 
@@ -121,10 +123,11 @@ def write_stage(df: DataFrame, path: str, fp: str,
     overwrite and commit an Iceberg-style snapshot manifest (fingerprint
     + data-file list with partition values/bytes/row counts). Returns a
     reader over the output (downstream stages consume the materialized
-    parquet, which truncates lineage and makes resume possible)."""
+    parquet, which truncates lineage and makes resume possible), pinned
+    to ``df``'s schema so no schema-inference job runs."""
     spark = spark or df.sparkSession
     if stage_is_current(path, fp):
-        return spark.read.parquet(path)
+        return spark.read.schema(df.schema).parquet(path)
     t0 = time.time()
     # Spark's full overwrite replaces the whole directory — carry the
     # commit log across it so lineage stays append-only (r4; the
@@ -151,7 +154,7 @@ def write_stage(df: DataFrame, path: str, fp: str,
         "total_rows": sum(x["rows"] for x in files),
         "total_bytes": sum(x["bytes"] for x in files),
         "n_data_files": len(files)})
-    return spark.read.parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def write_stage_buckets(df: DataFrame, path: str, bucket_fps: dict,
@@ -175,7 +178,7 @@ def write_stage_buckets(df: DataFrame, path: str, bucket_fps: dict,
     for dirty data — and replaced via dynamic partition overwrite.
     A dirty bucket that produces zero rows has its stale dir purged
     (same phantom rule as extract_incremental). Returns a reader over
-    the full stage output."""
+    the full stage output, pinned to the written schema."""
     import shutil
     spark = spark or df.sparkSession
     os.makedirs(path, exist_ok=True)
@@ -189,11 +192,13 @@ def write_stage_buckets(df: DataFrame, path: str, bucket_fps: dict,
     dirty = sorted((b for b in current if previous.get(b) != current[b]),
                    key=int)
     removed = sorted((b for b in previous if b not in current), key=int)
+    out_schema = None
     if dirty:
         from pyspark.sql import Observation
         sub = df.filter(F.col("bucket").isin([int(b) for b in dirty]))
         if transform is not None:
             sub = transform(sub)
+        out_schema = sub.schema
         # the bucket set PRESENT in the new data, observed during the
         # write job (no second pass): dynamic overwrite only replaces
         # partitions it sees, so a dirty bucket that came back empty
@@ -246,10 +251,11 @@ def write_stage_buckets(df: DataFrame, path: str, bucket_fps: dict,
              "removed_buckets": [int(b) for b in removed]})
     with open(os.path.join(path, "_buckets.json"), "w") as f:
         json.dump(current, f)
-    if not any(d.startswith("bucket=") for d in os.listdir(path)):
+    if out_schema is None:      # nothing written: plan the transform once
         out_schema = (transform(df) if transform is not None else df).schema
-        return spark.createDataFrame([], out_schema)
-    return spark.read.parquet(path)
+    if not any(d.startswith("bucket=") for d in os.listdir(path)):
+        return local_frame(spark, [], out_schema)
+    return spark.read.schema(out_schema).parquet(path)
 
 
 def stage_rows(path: str) -> int:
@@ -264,6 +270,8 @@ def stage_rows(path: str) -> int:
     import pyarrow.parquet as pq
     total = 0
     for root, _dirs, names in os.walk(path):
+        # legacy layout only: KGs written before kernel telemetry moved
+        # to _metrics/pipeline.json keep an extracted/_runmetrics table
         if "_runmetrics" in os.path.relpath(root, path).split(os.sep):
             continue
         for name in names:
@@ -369,7 +377,7 @@ def audit_bucket_stage(path: str) -> dict:
     buckets_on_disk: set = set()
     for root, _dirs, names in os.walk(path):
         if "_runmetrics" in os.path.relpath(root, path).split(os.sep):
-            continue  # run telemetry, not content
+            continue  # legacy run telemetry dir, not content
         for name in sorted(names):
             if not name.endswith(".parquet"):
                 continue
@@ -404,9 +412,11 @@ def audit_bucket_stage(path: str) -> dict:
             "warnings": warnings}
 
 
-def with_bucket(df: DataFrame, n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int = N_BUCKETS_DEFAULT,
+                key: str = "doc_id") -> DataFrame:
+    """Add the int ``bucket`` column: pmod(xxhash64(key), n_buckets)."""
     return df.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
+        "bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int"))
 
 
 # ------------------------------------------------- partition-level resume
@@ -437,11 +447,16 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
     directories are untouched on disk.
 
     Returns (reader over the full output, sorted dirty bucket list,
-    content_state) where content_state is a stable digest of the current
-    per-bucket fingerprint map — downstream stage fingerprints MUST key on
-    it (not on a caller-supplied corpus label) so editing the input re-runs
-    linking/canonicalization/materialize, not just extraction."""
-    from .extract import extract_docs
+    content_state, kernel) where content_state is a stable digest of the
+    current per-bucket fingerprint map — downstream stage fingerprints
+    MUST key on it (not on a caller-supplied corpus label) so editing the
+    input re-runs linking/canonicalization/materialize, not just
+    extraction — and kernel is the typed sum of this run's per-batch
+    kernel telemetry, ``{batches, docs, rows, sec}`` (all zero when no
+    bucket is dirty)."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from .extract import UNION_SCHEMA, extract_docs
 
     current = bucket_fingerprints(docs, n_buckets)
     current = {b: f"{fp}:{'+'.join(sorted(graphs))}"
@@ -457,6 +472,7 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
         pass
     dirty = sorted(b for b, fp in current.items() if previous.get(b) != fp)
     removed = sorted(b for b in previous if b not in current)
+    kernel = {"batches": 0, "docs": 0, "rows": 0, "sec": 0.0}
 
     if dirty:
         from pyspark.sql import Observation
@@ -472,7 +488,7 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
         # would survive as phantom rows unless purged against this set;
         # (b) the per-batch metric rows, which are RUN telemetry, not
         # content — they must not churn an unrelated bucket dir (their
-        # doc_id is synthetic) and are appended beside the data instead.
+        # doc_id is synthetic); the driver sums them into typed counters.
         # An Observation computes both DURING the write job (collect_set/
         # collect_list skip the when()-nulls), so the kernel streams
         # straight into the shuffle — no localCheckpoint materializing
@@ -487,7 +503,7 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
                                  F.struct("row_kind", "bucket")))
             .alias("parts"),
             F.collect_list(F.when(F.col("row_kind") == "metric",
-                                  F.struct("doc_id", "text")))
+                                  F.col("text")))
             .alias("metrics"))
         content = observed.filter(F.col("row_kind") != "metric") \
                           .repartition("row_kind", "bucket")
@@ -502,9 +518,13 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
                            with_mode)
         got = obs.get
         new_parts = {(r["row_kind"], int(r["bucket"])) for r in got["parts"]}
-        metrics = spark.createDataFrame(
-            [(r["doc_id"], r["text"]) for r in got["metrics"]],
-            "doc_id string, text string")
+        for text in got["metrics"]:        # "docs=<n> rows=<n> sec=<s>"
+            batch = dict(kv.split("=", 1) for kv in text.split())
+            kernel["batches"] += 1
+            kernel["docs"] += int(batch["docs"])
+            kernel["rows"] += int(batch["rows"])
+            kernel["sec"] += float(batch["sec"])
+        kernel["sec"] = round(kernel["sec"], 3)
         import shutil
         for kind_dir in os.listdir(path):
             if not kind_dir.startswith("row_kind="):
@@ -515,7 +535,6 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
                     stale = os.path.join(path, kind_dir, f"bucket={b}")
                     if os.path.isdir(stale):
                         shutil.rmtree(stale)
-        metrics.write.mode("append").parquet(os.path.join(path, "_runmetrics"))
     for b in removed:
         import shutil
         for kind_dir in os.listdir(path):
@@ -529,20 +548,22 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
         _append_snapshot(path, "dynamic-overwrite", content_state, {
             "dirty_buckets": dirty, "removed_buckets": removed,
             "n_buckets": n_buckets})
-    has_data = any(d.startswith("row_kind=") for d in os.listdir(path))
-    if not has_data:
+    schema = StructType(UNION_SCHEMA.fields
+                        + [StructField("bucket", IntegerType())])
+    if not any(d.startswith("row_kind=") for d in os.listdir(path)):
         # empty corpus (or all docs removed): no partition dirs to read
-        from propertygraph_spark.pipeline.extract import UNION_SCHEMA
-        reader = spark.createDataFrame([], UNION_SCHEMA) \
-            .withColumn("bucket", F.lit(0).cast("int"))
-        return reader, dirty, content_state
-    return spark.read.parquet(path), dirty, content_state
+        return local_frame(spark, [], schema), dirty, content_state, kernel
+    return (spark.read.schema(schema).parquet(path), dirty, content_state,
+            kernel)
 
 
 def write_metrics(triples: DataFrame, out_dir: str) -> dict:
     """Per-partition lineage + triple-count metrics beside the commit."""
-    by_bucket_pred = (triples.groupBy("bucket", "pred").count()
-                      .orderBy("bucket", "pred").collect())
+    # sorted on the driver: the table is bounded (buckets x preds), and
+    # a Spark orderBy would add a range-sampling job and a shuffle
+    by_bucket_pred = sorted(triples.groupBy("bucket", "pred").count()
+                            .collect(),
+                            key=lambda r: (r["bucket"], r["pred"]))
     metrics = {
         "triples_by_bucket_pred": [
             {"bucket": r["bucket"], "pred": r["pred"], "count": r["count"]}
@@ -569,6 +590,12 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
     -> [link: packed broadcast join, map-only] -> [canonicalize: CC loop]
     -> node/edge tables partitioned by doc bucket + metrics.
 
+    The returned metrics are also written to ``_metrics/pipeline.json``:
+    triple counts per (bucket, pred), ``stage_times``, row totals and
+    ``kernel``, the typed sum of the extract kernel's per-batch
+    telemetry for this run (``{batches, docs, rows, sec}``; docs counts
+    the docs of the dirty buckets only).
+
     ``docs_fingerprint`` is accepted for backward compatibility but
     IGNORED since the r5 bucket-incremental rework: staleness is keyed
     purely on per-bucket CONTENT fingerprints (plus the symbol-table /
@@ -578,7 +605,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
     """
     from .canonicalize import canonicalize_entities
     from .extract import MENTION_COLS, NODE_COLS, TRIPLE_COLS, extract_docs
-    from .linking import (corpus_symbol_table, link_mentions,
+    from .linking import (driver_symbol_table, link_mentions,
                           qualify_cross_file, symbol_dictionary)
 
     os.makedirs(out_dir, exist_ok=True)
@@ -591,7 +618,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
     # (otherwise tasks x dirs small-file explosion).
     t0 = time.time()
     union_path = os.path.join(out_dir, "extracted")
-    union, dirty_buckets, content_state = extract_incremental(
+    union, dirty_buckets, content_state, kernel = extract_incremental(
         spark, docs, union_path, n_buckets, graphs=graphs)
     # per-bucket content fps of the just-committed extract stage: every
     # downstream stage keys its OWN bucket fps on these (VERDICT r4 #7 —
@@ -629,13 +656,10 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
     symtab_local = None
     symtab_fp = "xfile=off"
     if xfile_link:
-        symtab_rows = sorted(
-            (r["recv_simple"], r["decl_fqn"])
-            for r in corpus_symbol_table(mentions.drop("bucket")).collect())
+        symtab_rows, symtab_local = driver_symbol_table(
+            mentions.drop("bucket"))
         symtab_fp = fingerprint(
             "symtab", *(f"{a}->{b}" for a, b in symtab_rows))
-        symtab_local = spark.createDataFrame(
-            symtab_rows, "recv_simple string, decl_fqn string")
     linked_bfps = {
         b: fingerprint("link", bfp, symtab_fp, link_strategy)
         for b, bfp in extract_bfps.items()}
@@ -661,14 +685,17 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
     # (mention, fqn) alias set: an edit that doesn't change any alias
     # pair (the common body-only edit) skips the CC loop entirely, and
     # one that does recomputes it, which is the correct global cost.
+    # The check comes BEFORE canonicalize_entities, whose size probe and
+    # driver-side CC run eagerly.
     t0 = time.time()
     alias_state = (linked.select("mention", "fqn").distinct()
                    .agg(F.expr("bit_xor(xxhash64(mention, fqn))").alias("h"),
                         F.count("*").alias("n")).collect()[0])
     fp3 = fingerprint("canon", alias_state["h"], alias_state["n"])
-    canon = canonicalize_entities(linked)
     canon_path = os.path.join(out_dir, "canonical")
-    canon = write_stage(canon, canon_path, fp3, spark=spark)
+    if not stage_is_current(canon_path, fp3):
+        write_stage(canonicalize_entities(linked), canon_path, fp3,
+                    spark=spark)
     stage_times["canonicalize"] = round(time.time() - t0, 3)
 
     # stage 4: final node/edge tables partitioned by doc bucket —
@@ -703,6 +730,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
 
     metrics = write_metrics(edges_out, out_dir)
     metrics["stage_times"] = stage_times
+    metrics["kernel"] = kernel
     metrics["nodes"] = stage_rows(os.path.join(out_dir, "nodes"))
     metrics["canonical_entities"] = stage_rows(canon_path)
     with open(os.path.join(out_dir, "_metrics", "pipeline.json"), "w") as f:
@@ -821,9 +849,10 @@ def remove_orphan_files(path: str, delete: bool = False) -> dict:
     — Iceberg ships the same action for the same reason.
 
     Table state files (``_manifest.json``/``_buckets.json``/
-    ``_snapshots.json``/``_SUCCESS``) and run telemetry
-    (``_runmetrics``) are never orphans. ``delete=False`` (default) is
-    the dry run: it only reports. Returns ``{"mode": "manifest" |
+    ``_snapshots.json``/``_SUCCESS``) and the run telemetry dir
+    ``_runmetrics`` of KGs written before kernel telemetry moved to
+    ``_metrics/pipeline.json`` are never orphans. ``delete=False``
+    (default) is the dry run: it only reports. Returns ``{"mode": "manifest" |
     "buckets", "orphans": [rel paths], "deleted": bool}``; raises
     ``ValueError`` on a dir with neither state file (unauditable — the
     caller cannot know what is live, same rule as the audit)."""
@@ -1050,9 +1079,7 @@ def merge_stage_buckets(spark: SparkSession, path: str,
     state_file = os.path.join(path, "_buckets.json")
     with open(state_file) as f:
         state = json.load(f)
-    upd = updates.withColumn(
-        "bucket", F.pmod(F.xxhash64(bucket_from),
-                         F.lit(n_buckets)).cast("int"))
+    upd = with_bucket(updates, n_buckets, key=bucket_from)
     is_del = (F.col(delete_col) if delete_col
               else F.lit(False)).alias("_is_del")
     upd = upd.select(*[c for c in upd.columns if c != delete_col],

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "propertygraph_spark",
@@ -43,3 +44,20 @@ def get_spark(app_name: str = "propertygraph_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
+    """Rows the driver already holds as a DataFrame over an Arrow-backed
+    ``LocalRelation``. ``createDataFrame(list)`` plans a ``PythonRDD``
+    whose first job starts Python workers only to unpickle the rows;
+    a pyarrow table is shipped once to the JVM and scans as a
+    ``LocalTableScan``, with no Spark job at all."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type)
+         for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

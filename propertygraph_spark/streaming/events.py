@@ -611,10 +611,7 @@ def streaming_upsert_sink(stream_df: DataFrame, path: str,
             base = bdf
             if delete_col:
                 base = base.filter(~F.col(delete_col)).drop(delete_col)
-            keyed = with_bucket(
-                base.withColumnRenamed(bfrom, "doc_id"), n_buckets) \
-                .withColumnRenamed("doc_id", bfrom) \
-                if bfrom != "doc_id" else with_bucket(base, n_buckets)
+            keyed = with_bucket(base, n_buckets, key=bfrom)
             keyed.write.mode("overwrite").partitionBy("bucket") \
                  .parquet(path)
             present = sorted({

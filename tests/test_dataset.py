@@ -382,6 +382,18 @@ def test_alpha_sample_upsamples_low_resource_strata(spark):
         assert 0.5 * expect <= r["n_sampled"] <= 1.6 * expect
 
 
+def test_alpha_sample_empty_corpus(spark):
+    """No docs -> no strata: an empty allocation table with the usual
+    columns, not a TypeError from the NULL stratum sum."""
+    from propertygraph_spark.ops.dataset import alpha_sample
+    docs = spark.createDataFrame([], "doc_id long, text string, "
+                                     "lang string")
+    out = alpha_sample(docs)
+    assert out.columns == ["stratum", "n_docs", "isqrt_docs", "keep_ppm",
+                           "n_sampled"]
+    assert out.collect() == []
+
+
 def test_alpha_sample_caps_rate_and_is_deterministic(spark):
     from propertygraph_spark.ops.dataset import alpha_sample
     rows = [(i, "x", "en" if i % 10 else "fr") for i in range(50)]

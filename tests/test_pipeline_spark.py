@@ -251,7 +251,7 @@ def test_incremental_extract_replays_only_dirty_buckets(spark, tmp_path):
     texts = {f"doc{i}": f"class C{i} {{ int m(int a) {{ return a + {i}; }} }}"
              for i in range(12)}
     out = str(tmp_path / "inc")
-    reader1, dirty1, _ = extract_incremental(spark, mk(texts), out, n_buckets=8)
+    reader1, dirty1, _, _ = extract_incremental(spark, mk(texts), out, n_buckets=8)
     n1 = reader1.filter("row_kind = 'triple'").count()
     assert len(dirty1) > 0  # first run: everything dirty
 
@@ -260,7 +260,7 @@ def test_incremental_extract_replays_only_dirty_buckets(spark, tmp_path):
               for p in globmod.glob(f"{out}/**/*.parquet", recursive=True)}
 
     # unchanged rerun -> zero dirty buckets, zero rewrites
-    _, dirty2, _ = extract_incremental(spark, mk(texts), out, n_buckets=8)
+    _, dirty2, _, _ = extract_incremental(spark, mk(texts), out, n_buckets=8)
     assert dirty2 == []
     after = {p: os.path.getmtime(p)
              for p in globmod.glob(f"{out}/**/*.parquet", recursive=True)}
@@ -268,7 +268,7 @@ def test_incremental_extract_replays_only_dirty_buckets(spark, tmp_path):
 
     # change ONE doc -> exactly its bucket replays; other files untouched
     texts["doc3"] = "class C3 { int m(int a) { return a * 99; } }"
-    reader3, dirty3, _ = extract_incremental(spark, mk(texts), out, n_buckets=8)
+    reader3, dirty3, _, _ = extract_incremental(spark, mk(texts), out, n_buckets=8)
     assert len(dirty3) == 1
     (dirty_bucket,) = dirty3
     changed = {p for p in globmod.glob(f"{out}/**/*.parquet", recursive=True)
@@ -278,8 +278,8 @@ def test_incremental_extract_replays_only_dirty_buckets(spark, tmp_path):
 
     # incremental result == full recompute
     full_out = str(tmp_path / "full")
-    full_reader, _, _ = extract_incremental(spark, mk(texts), full_out,
-                                         n_buckets=8)
+    full_reader, _, _, _ = extract_incremental(spark, mk(texts), full_out,
+                                               n_buckets=8)
     cols = ["doc_id", "method_id", "subj", "pred", "obj", "label"]
     a = reader3.filter("row_kind = 'triple'").select(cols)
     b = full_reader.filter("row_kind = 'triple'").select(cols)
@@ -405,6 +405,60 @@ def test_downstream_stages_replay_only_dirty_buckets(spark, tmp_path):
     assert m4["canonical_entities"] == fresh4["canonical_entities"]
 
 
+def test_body_only_edit_skips_cc_and_sums_kernel_telemetry(spark, tmp_path):
+    """A body-only edit leaves the alias set as it was, so the refresh
+    must not run the CC stage at all (CC_LAST_STATS untouched, no new
+    canonical snapshot). Kernel telemetry is typed counters in
+    _metrics/pipeline.json covering exactly the docs of the dirty
+    buckets, and no extracted/_runmetrics table is written."""
+    from propertygraph_spark.pipeline import canonicalize
+    from propertygraph_spark.pipeline.fixtures import DOCS_SCHEMA
+    from propertygraph_spark.pipeline.materialize import (snapshot_history,
+                                                          with_bucket)
+
+    def mk(lit: int):
+        texts = {
+            "str": "class S { int f(String s) { return s.trim().length(); } }",
+            "txt": "import org.acme.util.Text; class T { int g(Text t) "
+                   "{ t.trim(); return 1; } }",
+            **{f"doc{i}": f"class C{i} {{ int m(int a) {{ return a + "
+                          f"{lit if i == 5 else i}; }} }}" for i in range(8)}}
+        return spark.createDataFrame(
+            [(d, [("code", t, "", 0)]) for d, t in texts.items()],
+            DOCS_SCHEMA)
+
+    out = str(tmp_path / "kg")
+    canonicalize.CC_LAST_STATS.clear()
+    m1 = run_pipeline(spark, mk(5), out, n_buckets=8)
+    # the corpus has a real alias component ("trim" -> two fqns), so the
+    # cold build ran CC; otherwise the skip below would prove nothing
+    assert canonicalize.CC_LAST_STATS.get("n_edges", 0) > 0
+    assert m1["kernel"]["docs"] == 10 and m1["kernel"]["batches"] >= 1
+    assert m1["kernel"]["rows"] > 0 and m1["kernel"]["sec"] >= 0
+    with open(os.path.join(out, "_metrics", "pipeline.json")) as f:
+        assert json.load(f)["kernel"] == m1["kernel"]
+
+    canonicalize.CC_LAST_STATS.clear()
+    canonicalize.CC_LAST_STATS["marker"] = "not rewritten"
+    n_canon = len(snapshot_history(os.path.join(out, "canonical")))
+    m2 = run_pipeline(spark, mk(99), out, n_buckets=8)
+    assert canonicalize.CC_LAST_STATS == {"marker": "not rewritten"}
+    assert len(snapshot_history(os.path.join(out, "canonical"))) == n_canon
+    dirty = snapshot_history(os.path.join(out, "extracted"))[-1][
+        "dirty_buckets"]
+    assert len(dirty) == 1
+    in_dirty = with_bucket(mk(99), 8).filter(
+        F.col("bucket").isin(dirty)).count()
+    with open(os.path.join(out, "_metrics", "pipeline.json")) as f:
+        kernel = json.load(f)["kernel"]
+    assert kernel == m2["kernel"] and kernel["docs"] == in_dirty
+    assert m2["total"] == m1["total"]
+
+    m3 = run_pipeline(spark, mk(99), out, n_buckets=8)      # no-op
+    assert m3["kernel"] == {"batches": 0, "docs": 0, "rows": 0, "sec": 0.0}
+    assert not os.path.exists(os.path.join(out, "extracted", "_runmetrics"))
+
+
 def test_dirty_bucket_drops_vanished_row_kinds(spark, tmp_path):
     """A row_kind that disappears from a re-extracted bucket (the bucket's
     only malformed doc gets fixed -> no more error rows) must disappear
@@ -423,9 +477,9 @@ def test_dirty_bucket_drops_vanished_row_kinds(spark, tmp_path):
         return spark.createDataFrame(rows, DOCS_SCHEMA)
 
     out = str(tmp_path / "vanish")
-    reader1, _, _ = extract_incremental(spark, mk(True), out, n_buckets=4)
+    reader1, _, _, _ = extract_incremental(spark, mk(True), out, n_buckets=4)
     assert reader1.filter("row_kind = 'error'").count() == 1
-    reader2, dirty2, _ = extract_incremental(spark, mk(False), out,
+    reader2, dirty2, _, _ = extract_incremental(spark, mk(False), out,
                                              n_buckets=4)
     assert dirty2  # the fixed doc's bucket replayed
     assert reader2.filter("row_kind = 'error'").count() == 0  # no phantoms
@@ -438,7 +492,7 @@ def test_incremental_extract_empty_corpus(spark, tmp_path):
     from propertygraph_spark.pipeline.materialize import extract_incremental
     docs = spark.createDataFrame([], DOCS_SCHEMA)
     out = str(tmp_path / "empty")
-    reader, dirty, _ = extract_incremental(spark, docs, out, n_buckets=4)
+    reader, dirty, _, _ = extract_incremental(spark, docs, out, n_buckets=4)
     assert dirty == []
     assert reader.count() == 0
 

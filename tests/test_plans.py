@@ -19,10 +19,10 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.01"
 
 
-def plan(df) -> str:
+def plan(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+        df.explain(mode=mode)
     return buf.getvalue()
 
 
@@ -785,3 +785,50 @@ def test_r5s9_new_op_plan_shapes(spark, docs):
     assert "Scan ExistingRDD" in p or "LocalTableScan" in p, p
     # sanity: the real trainer produces its 6 merges on this corpus
     assert bpe_train(docs, n_merges=2).count() == 2
+
+
+def test_driver_held_tables_plan_as_local_relations(spark, tmp_path):
+    """Tables the driver already holds (symbol dictionary, corpus symbol
+    table, the driver-path CC map, empty-stage readers) must plan as an
+    Arrow-backed LocalRelation: a PythonRDD / LogicalRDD source would
+    start Python workers in a job of its own only to unpickle rows the
+    driver already has — the fixed cost local_frame removes from every
+    run_pipeline call. A silent fallback to createDataFrame(list) fails
+    here."""
+    from propertygraph_spark.pipeline.canonicalize import \
+        connected_components
+    from propertygraph_spark.pipeline.fixtures import DOCS_SCHEMA
+    from propertygraph_spark.pipeline.linking import (driver_symbol_table,
+                                                      symbol_dictionary)
+    from propertygraph_spark.pipeline.materialize import (
+        extract_incremental, write_stage_buckets)
+
+    mentions = spark.createDataFrame(
+        [("d1", "m", 1, "Text", "class_decl", "org.acme.Text"),
+         ("d2", "m", 2, "Util", "class_decl", "org.acme.Util")],
+        "doc_id string, method_id string, node_id long, mention string,"
+        " kind string, candidate string")
+    rows, symtab = driver_symbol_table(mentions)
+    assert rows == [("Text", "org.acme.Text"), ("Util", "org.acme.Util")]
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
+                                  "src long, dst long")
+    empty = spark.createDataFrame([], "doc_id long, bucket long")
+    no_docs = spark.createDataFrame([], DOCS_SCHEMA)
+    tables = {
+        "symbol_dictionary": symbol_dictionary(spark),
+        "symbol_table": symtab,
+        "cc_driver_path": connected_components(edges),
+        "empty_bucket_stage": write_stage_buckets(
+            empty, str(tmp_path / "stage"), {}, spark=spark),
+        "empty_extract_stage": extract_incremental(
+            spark, no_docs, str(tmp_path / "extracted"), n_buckets=4)[0],
+    }
+    for name, df in tables.items():
+        p = plan(df, mode="extended")
+        assert "LocalRelation" in p and "LocalTableScan" in p, (name, p)
+        for src in ("PythonRDD", "LogicalRDD", "ExistingRDD"):
+            assert src not in p, (name, p)
+    assert sorted(map(tuple, tables["symbol_table"].collect())) == rows
+    assert {(r["id"], r["component"])
+            for r in tables["cc_driver_path"].collect()} == {
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
