@@ -21,6 +21,7 @@ pe/ProgramElementInfo.java:32).
 
 from __future__ import annotations
 
+import gc
 from typing import Dict, List, Optional, Tuple
 
 from .cfg import CFG, CFGNodeFactory, K_CONTROL
@@ -109,7 +110,29 @@ def extract_document_columns(
     On failure the document degrades to the partial columns accumulated
     so far with the error recorded (the reference's PESafeStack drops
     subtrees; we additionally never fail the batch).
+
+    The cyclic collector is paused for the document: its AST, PE and
+    graph objects are all alive until it ends, so collections triggered
+    while building them only re-walk live objects (the kernel's largest
+    layer in an in-process replay). One generation-0 sweep at the end
+    frees the document's cycles; the caller's ``gc`` state is restored
+    on every exit path.
     """
+    enabled = gc.isenabled()
+    gc.disable()
+    try:
+        return _document_columns(doc_id, source, graphs, max_source_chars,
+                                 max_nodes)
+    finally:
+        if enabled:
+            gc.enable()
+            gc.collect(0)
+
+
+def _document_columns(doc_id: str, source: str, graphs: Tuple[str, ...],
+                      max_source_chars: int, max_nodes: int) -> tuple:
+    """The body of ``extract_document_columns``, which runs it with the
+    collector paused."""
     n_mid: list = []
     n_nid: list = []
     n_graph: list = []

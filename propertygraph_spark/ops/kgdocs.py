@@ -1986,13 +1986,13 @@ def linked_mentions(documents: DataFrame) -> DataFrame:
     scoring host-side over the frozen per-template occurrence multiset
     (north_star linking stage, now oracle-checked end to end)."""
     from propertygraph_spark.pipeline.extract import extract_docs, split_union
-    from propertygraph_spark.pipeline.linking import (link_mentions,
-                                                      symbol_dictionary)
+    from propertygraph_spark.pipeline.linking import (
+        link_mentions, packed_symbol_dictionary)
     docs = docs_with_spans(documents)
     union = extract_docs(docs, route=False)
     _, _, mentions, _ = split_union(union)
     linked = link_mentions(mentions,
-                           symbol_dictionary(documents.sparkSession))
+                           packed_symbol_dictionary(documents.sparkSession))
     return (linked.groupBy(
                 "mention", "fqn",
                 F.floor(F.col("score") * 1000).cast("long").alias("score_pm"))
@@ -2016,13 +2016,13 @@ def call_graph(documents: DataFrame) -> DataFrame:
     linking stage feeding it is the packed map-only broadcast join, so
     the only corpus-sized exchange is the final bounded-key agg."""
     from propertygraph_spark.pipeline.extract import extract_docs, split_union
-    from propertygraph_spark.pipeline.linking import (link_mentions,
-                                                      symbol_dictionary)
+    from propertygraph_spark.pipeline.linking import (
+        link_mentions, packed_symbol_dictionary)
     docs = docs_with_spans(documents)
     union = extract_docs(docs, route=False)
     _, _, mentions, _ = split_union(union)
     linked = link_mentions(mentions,
-                           symbol_dictionary(documents.sparkSession))
+                           packed_symbol_dictionary(documents.sparkSession))
     calls = linked.filter(F.col("kind") == "call_site")
     caller = F.concat(F.lit("D"), _tpl_of_method().cast("string"))
     return (calls.groupBy(caller.alias("caller"),
@@ -2045,13 +2045,13 @@ def api_cooccurrence(documents: DataFrame) -> DataFrame:
     self-join), and the final count groups on the bounded API-pair
     key space."""
     from propertygraph_spark.pipeline.extract import extract_docs, split_union
-    from propertygraph_spark.pipeline.linking import (link_mentions,
-                                                      symbol_dictionary)
+    from propertygraph_spark.pipeline.linking import (
+        link_mentions, packed_symbol_dictionary)
     docs = docs_with_spans(documents)
     union = extract_docs(docs, route=False)
     _, _, mentions, _ = split_union(union)
     linked = link_mentions(mentions,
-                           symbol_dictionary(documents.sparkSession))
+                           packed_symbol_dictionary(documents.sparkSession))
     calls = linked.filter(F.col("kind") == "call_site")
     per_doc = (calls.groupBy("doc_id")
                .agg(F.sort_array(F.collect_set("fqn")).alias("apis")))
@@ -2115,13 +2115,13 @@ def api_bigrams(documents: DataFrame) -> DataFrame:
     by one (arrays_zip of two slices — no join), and the final count
     groups on the bounded fqn-pair key space."""
     from propertygraph_spark.pipeline.extract import extract_docs, split_union
-    from propertygraph_spark.pipeline.linking import (link_mentions,
-                                                      symbol_dictionary)
+    from propertygraph_spark.pipeline.linking import (
+        link_mentions, packed_symbol_dictionary)
     docs = docs_with_spans(documents)
     union = extract_docs(docs, route=False)
     _, _, mentions, _ = split_union(union)
     linked = link_mentions(mentions,
-                           symbol_dictionary(documents.sparkSession))
+                           packed_symbol_dictionary(documents.sparkSession))
     calls = linked.filter(F.col("kind") == "call_site")
     seq = (calls.groupBy("doc_id")
            .agg(F.transform(
@@ -2502,13 +2502,13 @@ def canonical_entities(documents: DataFrame) -> DataFrame:
     second implementation, not a replayed constant."""
     from propertygraph_spark.pipeline.canonicalize import canonicalize_entities
     from propertygraph_spark.pipeline.extract import extract_docs, split_union
-    from propertygraph_spark.pipeline.linking import (link_mentions,
-                                                      symbol_dictionary)
+    from propertygraph_spark.pipeline.linking import (
+        link_mentions, packed_symbol_dictionary)
     docs = docs_with_spans(documents)
     union = extract_docs(docs, route=False)
     _, _, mentions, _ = split_union(union)
     linked = link_mentions(mentions,
-                           symbol_dictionary(documents.sparkSession))
+                           packed_symbol_dictionary(documents.sparkSession))
     return canonicalize_entities(linked).orderBy("fqn")
 
 

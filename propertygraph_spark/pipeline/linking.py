@@ -1,13 +1,17 @@
-"""Entity linking: mention table vs broadcast symbol dictionary.
+"""Entity linking: mention table vs a driver-packed symbol dictionary.
 
 north_star: "Entity linking scores candidate symbol mentions against a
 broadcast dictionary of fully-qualified declarations (salted hash join to
 absorb hot symbols like java.lang.String)".
 
-Two join strategies are provided:
-- ``broadcast`` (default): the dictionary is small relative to mentions;
-  a broadcast hash join is immune to build-side skew — the right default
-  on a 1000-executor cluster while dict << executor memory;
+Three join strategies are provided (``link_mentions``):
+- ``packed`` (default, the one production runs): the dictionary is packed
+  on the driver to one row per simple name carrying its candidate array
+  (``packed_dictionary``), shipped as an Arrow-backed ``LocalRelation``
+  and broadcast-joined; the argmax is an in-row fold, so the stage is
+  map-only and hot names cause no skew;
+- ``broadcast``: the flat dictionary broadcast-joined per candidate, then
+  a max_by aggregation keyed on the mention occurrence;
 - ``salted``: when the dictionary outgrows broadcast, the sort-merge path
   suffers hot keys (java.lang.String-class names dominate Zipf-style).
   The mention side gets salt = pmod(xxhash64(doc_id, node_id), S) and the
@@ -21,7 +25,8 @@ import random
 from typing import List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (DoubleType, StringType, StructField, StructType)
+from pyspark.sql.types import (ArrayType, DoubleType, StringType, StructField,
+                               StructType)
 
 from .session import local_frame
 
@@ -30,6 +35,19 @@ DICT_SCHEMA = StructType([
     StructField("simple_name", StringType(), False),
     StructField("sym_kind", StringType(), False),
     StructField("weight", DoubleType(), False),
+])
+
+PACKED_DICT_SCHEMA = StructType([
+    StructField("simple_name", StringType(), False),
+    StructField("cands", ArrayType(StructType([
+        StructField("fqn", StringType(), False),
+        StructField("weight", DoubleType(), False),
+    ]), False), False),
+])
+
+SYMTAB_SCHEMA = StructType([
+    StructField("recv_simple", StringType(), False),
+    StructField("decl_fqn", StringType(), False),
 ])
 
 _PKGS = ("java.lang java.util java.io org.acme.core org.acme.io"
@@ -82,6 +100,25 @@ def symbol_dictionary(spark: SparkSession, n_symbols: int = 2000,
     return local_frame(spark, symbol_rows(n_symbols, seed), DICT_SCHEMA)
 
 
+def packed_dictionary(spark: SparkSession, rows) -> DataFrame:
+    """Dictionary rows (fqn, simple_name, sym_kind, weight) packed on the
+    driver to one row per simple name, ``(simple_name, cands)`` with
+    ``cands`` its (fqn, weight) array, as an Arrow-backed
+    ``LocalRelation``: the input of the ``packed`` strategy. The
+    dictionary is a driver-held constant, so packing it here keeps the
+    groupBy shuffle (and its jobs) out of every linking plan."""
+    by_name: dict = {}
+    for fqn, name, _kind, weight in rows:
+        by_name.setdefault(name, []).append({"fqn": fqn, "weight": weight})
+    return local_frame(spark, sorted(by_name.items()), PACKED_DICT_SCHEMA)
+
+
+def packed_symbol_dictionary(spark: SparkSession, n_symbols: int = 2000,
+                             seed: int = 42) -> DataFrame:
+    """``symbol_dictionary`` packed for the ``packed`` strategy."""
+    return packed_dictionary(spark, symbol_rows(n_symbols, seed))
+
+
 def corpus_symbol_table(mentions: DataFrame) -> DataFrame:
     """(recv_simple, decl_fqn): every class simple name declared under
     exactly ONE fully-qualified name anywhere in the corpus.
@@ -111,15 +148,18 @@ def corpus_symbol_table(mentions: DataFrame) -> DataFrame:
             .select("recv_simple", "decl_fqn"))
 
 
-def driver_symbol_table(mentions: DataFrame) -> Tuple[list, DataFrame]:
-    """``corpus_symbol_table`` collected to the driver: its sorted
-    (recv_simple, decl_fqn) rows, for fingerprinting, and the same rows
-    as an Arrow-backed ``LocalRelation`` for the broadcast join in
-    ``qualify_cross_file`` (one collect job; the table is broadcast-scale
-    by construction)."""
-    table = corpus_symbol_table(mentions)
-    rows = sorted((r["recv_simple"], r["decl_fqn"]) for r in table.collect())
-    return rows, local_frame(mentions.sparkSession, rows, table.schema)
+def symbol_table_rows(decls) -> List[Tuple[str, str]]:
+    """``corpus_symbol_table`` on the driver, from the corpus's
+    ``class_decl`` (simple name, fqn) pairs: the sorted
+    (recv_simple, decl_fqn) rows of every simple name declared under
+    exactly one fqn. ``run_pipeline`` feeds it the pairs each extract
+    bucket recorded at write time, so no Spark job scans the mentions;
+    ship the rows with ``local_frame(spark, rows, SYMTAB_SCHEMA)``."""
+    fqns: dict = {}
+    for name, fqn in decls:
+        fqns.setdefault(name, set()).add(fqn)
+    return sorted((name, next(iter(f))) for name, f in fqns.items()
+                  if len(f) == 1)
 
 
 # static-receiver call form the kernel could NOT qualify: one uppercase
@@ -185,45 +225,44 @@ def link_mentions(mentions: DataFrame, symbol_dict: DataFrame,
         wildcards, so the host replay is bit-identical.
 
     Strategies:
-    - ``packed`` (default, r5): the dictionary is pre-grouped to ONE row
-      per simple name carrying a (fqn, weight) candidate array; each
-      mention occurrence broadcast-joins exactly one row and the argmax
-      is an in-row ``array_max`` over scored structs. MAP-ONLY — no
-      occurrence groupBy, so the 10^12-row mention table never
-      shuffles, and hot simple names cause no skew by construction
-      (one dictionary row regardless of popularity). Weights are
-      pairwise-distinct within a simple-name group (symbol_rows
-      docstring), so the argmax is tie-free and all three strategies
-      are row-identical (pinned in tests/test_linking_canon.py).
-      Stateless, so the streaming path reuses it verbatim.
-    - ``broadcast``: exploded-dictionary broadcast join + max_by
-      aggregation (one occurrence-keyed shuffle).
-    - ``salted``: the shuffle-join variant for a dictionary too large
-      to broadcast; the salt spreads hot simple names over ``salt``
-      partitions."""
+    - ``packed`` (default, r5): ``symbol_dict`` is the driver-packed
+      dictionary (``packed_dictionary``: ONE row per simple name
+      carrying a (fqn, weight) candidate array); each mention
+      occurrence broadcast-joins exactly one row and the argmax is an
+      in-row ``array_max`` over scored structs. MAP-ONLY — no
+      exchange besides the dictionary's broadcast, so the 10^12-row
+      mention table never shuffles, and hot simple names cause no
+      skew by construction (one dictionary row regardless of
+      popularity). Weights are pairwise-distinct within a simple-name
+      group (symbol_rows docstring), so the argmax is tie-free and all
+      three strategies are row-identical (pinned in
+      tests/test_linking_canon.py). Stateless, so the streaming path
+      reuses it verbatim.
+    - ``broadcast``: ``symbol_dict`` is the flat dictionary
+      (``DICT_SCHEMA``); broadcast join + max_by aggregation (one
+      occurrence-keyed shuffle).
+    - ``salted``: the shuffle-join variant for a flat dictionary too
+      large to broadcast; the salt spreads hot simple names over
+      ``salt`` partitions."""
     m = mentions.withColumn("simple_name", F.col("mention"))
     if strategy == "packed":
-        packed = (symbol_dict.groupBy("simple_name")
-                  .agg(F.collect_list(F.struct("fqn", "weight"))
-                       .alias("cands")))
-        joined = m.join(F.broadcast(packed), "simple_name", "inner")
-        stem = F.expr("substring(candidate, 1, length(candidate) - 2)")
-        cand, sn = F.col("candidate"), F.col("simple_name")
-
-        def _score(x):
-            typed_hit = (cand.isNotNull() & cand.endswith("()")
-                         & ((x["fqn"] == stem)
-                            | x["fqn"].endswith(F.concat(F.lit("."), stem))))
-            call_form = (cand.isNotNull()
-                         & cand.endswith(F.concat(sn, F.lit("()")))
-                         & x["fqn"].endswith(sn))
-            return (x["weight"]
-                    + F.when(typed_hit, F.lit(0.5)).otherwise(F.lit(0.0))
-                    + F.when(call_form, F.lit(0.25)).otherwise(F.lit(0.0)))
-
-        best = F.array_max(F.transform(
-            "cands", lambda x: F.struct(_score(x).alias("score"),
-                                        x["fqn"].alias("fqn"))))
+        if "cands" not in symbol_dict.columns:
+            raise ValueError("the packed strategy takes a packed "
+                             "dictionary (linking.packed_dictionary)")
+        joined = m.join(F.broadcast(symbol_dict), "simple_name", "inner")
+        # one SQL expression: built from Column lambdas, the same fold
+        # took some 350 more py4j round trips to plan
+        stem = "substring(candidate, 1, length(candidate) - 2)"
+        best = F.expr(
+            "array_max(transform(cands, x -> named_struct('score', x.weight"
+            " + CASE WHEN candidate IS NOT NULL"
+            " AND endswith(candidate, '()')"
+            f" AND (x.fqn = {stem} OR endswith(x.fqn, concat('.', {stem})))"
+            " THEN 0.5D ELSE 0.0D END"
+            " + CASE WHEN candidate IS NOT NULL"
+            " AND endswith(candidate, concat(simple_name, '()'))"
+            " AND endswith(x.fqn, simple_name) THEN 0.25D ELSE 0.0D END,"
+            " 'fqn', x.fqn)))")
         return (joined.withColumn("best", best)
                 .select("doc_id", "method_id", "node_id", "mention", "kind",
                         F.col("best.fqn").alias("fqn"),

@@ -14,7 +14,9 @@ north_rule requirements covered here:
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import time
 from typing import Optional
@@ -24,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .session import local_frame
 
 N_BUCKETS_DEFAULT = 32
-_LOGIC_VERSION = "1"  # bump to invalidate all stage checkpoints
+_LOGIC_VERSION = "2"  # bump to invalidate all stage checkpoints
+_STATE_FILE = "_bucket_state.json"
 
 
 def fingerprint(*parts) -> str:
@@ -47,6 +50,42 @@ def stage_is_current(path: str, fp: str) -> bool:
             return json.load(f).get("fingerprint") == fp
     except (OSError, ValueError):
         return False
+
+
+def read_bucket_state(path: str) -> dict:
+    """A stage's per-bucket state ledger, ``{bucket: sorted values}``:
+    the facts a global consumer needs from each bucket (class_decl pairs
+    of ``extracted``, alias-pair hashes of ``linked``), recorded by the
+    bucket writes while they write. Strict read: the stage writer
+    commits it on every call, so a missing file is a real fault."""
+    with open(os.path.join(path, _STATE_FILE)) as f:
+        return json.load(f)
+
+
+def _commit_bucket_state(path: str, current, dirty: list, removed: list,
+                         observed: list) -> None:
+    """Rewrite the state ledger of a stage whose ``current`` buckets
+    this write left as they were except the ``dirty`` and ``removed``
+    ones: clean buckets' entries carry over, the rows ``observed``
+    during the write, ``(bucket, value)`` pairs, replace the dirty
+    ones, and removed buckets and dirty buckets that came back with no
+    state drop out. Called after the data commit and BEFORE
+    ``_buckets.json``: a crash in between leaves the buckets dirty, so
+    the next run redoes data and state together."""
+    ledger = os.path.join(path, _STATE_FILE)
+    if not dirty and not removed and os.path.exists(ledger):
+        return
+    clean = [str(b) for b in current if b not in dirty]
+    state: dict = {}
+    if clean:
+        previous = read_bucket_state(path)
+        state = {b: previous[b] for b in clean if b in previous}
+    for bucket, value in observed:
+        if value is not None:
+            state.setdefault(str(bucket), []).append(value)
+    with open(ledger, "w") as f:
+        json.dump({b: sorted(state[b]) for b in sorted(state, key=int)}, f,
+                  separators=(",", ":"))
 
 
 def _data_files(path: str) -> list:
@@ -157,9 +196,25 @@ def write_stage(df: DataFrame, path: str, fp: str,
     return spark.read.schema(df.schema).parquet(path)
 
 
+def _bucket_diff(path: str, bucket_fps: dict) -> tuple:
+    """(current fps keyed by str bucket, dirty buckets, removed buckets)
+    of a bucket-incremental stage against its committed ``_buckets.json``."""
+    current = {str(b): fp for b, fp in bucket_fps.items()}
+    previous: dict = {}
+    try:
+        with open(os.path.join(path, "_buckets.json")) as f:
+            previous = json.load(f)
+    except (OSError, ValueError):
+        pass
+    dirty = sorted((b for b in current if previous.get(b) != current[b]),
+                   key=int)
+    removed = sorted((b for b in previous if b not in current), key=int)
+    return current, dirty, removed
+
+
 def write_stage_buckets(df: DataFrame, path: str, bucket_fps: dict,
                         spark: Optional[SparkSession] = None,
-                        transform=None) -> DataFrame:
+                        transform=None, state=None) -> DataFrame:
     """Bucket-incremental stage write — the generalization of
     ``extract_incremental``'s dirty-partition commit to the DOWNSTREAM
     stages (north_rule: 'failed stages replay only dirty partitions';
@@ -177,21 +232,16 @@ def write_stage_buckets(df: DataFrame, path: str, bucket_fps: dict,
     and per-bucket work (linking joins, dedup shuffles) happens only
     for dirty data — and replaced via dynamic partition overwrite.
     A dirty bucket that produces zero rows has its stale dir purged
-    (same phantom rule as extract_incremental). Returns a reader over
-    the full stage output, pinned to the written schema."""
+    (same phantom rule as extract_incremental). ``state``, a Column
+    over the written rows, is observed per bucket during the write job
+    and kept in the stage's ``_bucket_state.json`` ledger
+    (``read_bucket_state``), so a global consumer merges it on the
+    driver instead of rescanning the stage. Returns a reader over the
+    full stage output, pinned to the written schema."""
     import shutil
     spark = spark or df.sparkSession
     os.makedirs(path, exist_ok=True)
-    current = {str(b): fp for b, fp in bucket_fps.items()}
-    previous: dict = {}
-    try:
-        with open(os.path.join(path, "_buckets.json")) as f:
-            previous = json.load(f)
-    except (OSError, ValueError):
-        pass
-    dirty = sorted((b for b in current if previous.get(b) != current[b]),
-                   key=int)
-    removed = sorted((b for b in previous if b not in current), key=int)
+    current, dirty, removed = _bucket_diff(path, bucket_fps)
     out_schema = None
     if dirty:
         from pyspark.sql import Observation
@@ -204,7 +254,11 @@ def write_stage_buckets(df: DataFrame, path: str, bucket_fps: dict,
         # partitions it sees, so a dirty bucket that came back empty
         # must be purged explicitly — AFTER the write commits
         obs = Observation(f"stage_buckets_{os.path.basename(path)}")
-        observed = sub.observe(obs, F.collect_set("bucket").alias("parts"))
+        aggs = [F.collect_set("bucket").alias("parts")]
+        if state is not None:
+            aggs.append(F.collect_set(F.struct("bucket", state))
+                        .alias("state"))
+        observed = sub.observe(obs, *aggs)
         mode0 = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
                                "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -223,6 +277,9 @@ def write_stage_buckets(df: DataFrame, path: str, bucket_fps: dict,
         target = os.path.join(path, f"bucket={b}")
         if os.path.isdir(target):
             shutil.rmtree(target)
+    if state is not None:
+        _commit_bucket_state(path, current, dirty, removed,
+                             obs.get["state"] if dirty else [])
     if dirty or removed:
         # a stage that previously committed via full-overwrite manifests
         # must not leave the stale _manifest.json behind — the audit
@@ -453,13 +510,15 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
     input re-runs linking/canonicalization/materialize, not just
     extraction — and kernel is the typed sum of this run's per-batch
     kernel telemetry, ``{batches, docs, rows, sec}`` (all zero when no
-    bucket is dirty)."""
+    bucket is dirty). Each bucket's ``class_decl`` (mention, candidate)
+    pairs are kept in the stage's state ledger (``read_bucket_state``):
+    the input of the corpus symbol table."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     from .extract import UNION_SCHEMA, extract_docs
 
     current = bucket_fingerprints(docs, n_buckets)
-    current = {b: f"{fp}:{'+'.join(sorted(graphs))}"
+    current = {b: f"{fp}:{'+'.join(sorted(graphs))}:v{_LOGIC_VERSION}"
                for b, fp in current.items()}
     content_state = fingerprint(*(f"{b}={current[b]}"
                                   for b in sorted(current)))
@@ -473,6 +532,7 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
     dirty = sorted(b for b, fp in current.items() if previous.get(b) != fp)
     removed = sorted(b for b in previous if b not in current)
     kernel = {"batches": 0, "docs": 0, "rows": 0, "sec": 0.0}
+    decls: list = []
 
     if dirty:
         from pyspark.sql import Observation
@@ -480,7 +540,7 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
         bucketed = with_bucket(docs, n_buckets)
         subset = bucketed.filter(F.col("bucket").isin(dirty)).drop("bucket")
         union = with_bucket(extract_docs(subset, graphs=graphs), n_buckets)
-        # Two driver-side facts must come out of the kernel pass without
+        # Three driver-side facts must come out of the kernel pass without
         # running it twice: (a) the exact (row_kind, bucket) partition
         # set PRESENT in the new data — dynamic overwrite only replaces
         # partitions it sees, so a row_kind that vanished from a dirty
@@ -488,25 +548,36 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
         # would survive as phantom rows unless purged against this set;
         # (b) the per-batch metric rows, which are RUN telemetry, not
         # content — they must not churn an unrelated bucket dir (their
-        # doc_id is synthetic); the driver sums them into typed counters.
-        # An Observation computes both DURING the write job (collect_set/
+        # doc_id is synthetic); the driver sums them into typed counters;
+        # (c) the class_decl pairs of each dirty bucket, the bucket's
+        # share of the corpus symbol table (state ledger).
+        # An Observation computes all three DURING the write job (collect_set/
         # collect_list skip the when()-nulls), so the kernel streams
         # straight into the shuffle — no localCheckpoint materializing
-        # millions of rows, no second job. Phantoms are purged only
+        # millions of rows, no second job. It observes AFTER the
+        # shuffle, which the metric rows ride (one per kernel batch):
+        # the shuffle is then never empty, even when every dirty doc
+        # comes back without rows. AQE replaces an empty shuffle and
+        # everything above it by an empty relation, and an Observation
+        # below it would never report. Phantoms are purged only
         # AFTER the write succeeds — deleting first would destroy the
         # old buckets if the write job fails, leaving a reader of the
         # output with silently missing partitions.
         obs = Observation("extract_parts")
-        observed = union.observe(
+        observed = union.repartition("row_kind", "bucket").observe(
             obs,
             F.collect_set(F.when(F.col("row_kind") != "metric",
                                  F.struct("row_kind", "bucket")))
             .alias("parts"),
             F.collect_list(F.when(F.col("row_kind") == "metric",
                                   F.col("text")))
-            .alias("metrics"))
-        content = observed.filter(F.col("row_kind") != "metric") \
-                          .repartition("row_kind", "bucket")
+            .alias("metrics"),
+            F.collect_set(F.when(
+                (F.col("row_kind") == "mention")
+                & (F.col("kind") == "class_decl"),
+                F.struct("bucket", F.array("mention", "candidate"))))
+            .alias("decls"))
+        content = observed.filter(F.col("row_kind") != "metric")
         with_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
                                    "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -518,6 +589,7 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
                            with_mode)
         got = obs.get
         new_parts = {(r["row_kind"], int(r["bucket"])) for r in got["parts"]}
+        decls = got["decls"]
         for text in got["metrics"]:        # "docs=<n> rows=<n> sec=<s>"
             batch = dict(kv.split("=", 1) for kv in text.split())
             kernel["batches"] += 1
@@ -542,6 +614,7 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
             if os.path.isdir(target):
                 shutil.rmtree(target)
     os.makedirs(path, exist_ok=True)
+    _commit_bucket_state(path, current, dirty, removed, decls)
     with open(manifest_file, "w") as f:
         json.dump({str(k): v for k, v in current.items()}, f)
     if dirty or removed:
@@ -557,18 +630,26 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
             kernel)
 
 
-def write_metrics(triples: DataFrame, out_dir: str) -> dict:
-    """Per-partition lineage + triple-count metrics beside the commit."""
+def write_metrics(edges: DataFrame, out_dir: str, carried: list,
+                  recount: list) -> dict:
+    """Per-partition lineage + triple-count metrics beside the commit:
+    the (bucket, pred) counts of ``carried`` (rows of the previous
+    ``triples_by_bucket_pred`` still valid) plus a recount of the
+    ``recount`` buckets of ``edges``. With nothing to recount, no
+    Spark job runs."""
+    rows = list(carried)
+    if recount:
+        rows += [r.asDict() for r in
+                 edges.filter(F.col("bucket").isin([int(b) for b in recount]))
+                 .groupBy("bucket", "pred").count().collect()]
     # sorted on the driver: the table is bounded (buckets x preds), and
     # a Spark orderBy would add a range-sampling job and a shuffle
-    by_bucket_pred = sorted(triples.groupBy("bucket", "pred").count()
-                            .collect(),
-                            key=lambda r: (r["bucket"], r["pred"]))
+    rows.sort(key=lambda r: (r["bucket"], r["pred"]))
     metrics = {
         "triples_by_bucket_pred": [
             {"bucket": r["bucket"], "pred": r["pred"], "count": r["count"]}
-            for r in by_bucket_pred],
-        "total": int(sum(r["count"] for r in by_bucket_pred)),
+            for r in rows],
+        "total": int(sum(r["count"] for r in rows)),
         "generated_at": time.time(),
     }
     os.makedirs(os.path.join(out_dir, "_metrics"), exist_ok=True)
@@ -577,10 +658,31 @@ def write_metrics(triples: DataFrame, out_dir: str) -> dict:
     return metrics
 
 
+def _carry_triple_counts(out_dir: str, edges_path: str,
+                         edges_fps: dict) -> tuple:
+    """Split the edge buckets into the previous triple counts that stay
+    valid (the rows of buckets the edges write leaves clean) and the
+    buckets ``write_metrics`` must recount. When the edges write will
+    change anything, ``triples.json`` is deleted BEFORE it: a crash
+    between the edges commit and the metrics write then leaves no file,
+    and the next run recounts every bucket instead of carrying stale
+    counts for buckets that look clean."""
+    metrics_file = os.path.join(out_dir, "_metrics", "triples.json")
+    current, dirty, removed = _bucket_diff(edges_path, edges_fps)
+    try:
+        with open(metrics_file) as f:
+            previous = json.load(f)["triples_by_bucket_pred"]
+    except (OSError, ValueError, KeyError):
+        return [], sorted(current, key=int)
+    if dirty or removed:
+        os.remove(metrics_file)
+    clean = {int(b) for b in current if b not in dirty}
+    return [r for r in previous if r["bucket"] in clean], dirty
+
+
 def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
                  n_buckets: int = N_BUCKETS_DEFAULT,
                  docs_fingerprint: str = "",
-                 link_strategy: str = "packed",
                  graphs: tuple = ("ast", "cfg", "pdg"),
                  xfile_link: bool = True) -> dict:
     """Full KG-construction pipeline with per-stage checkpoint/resume.
@@ -589,6 +691,14 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
     row_kind: partition pruning splits node/triple/mention reads for free)
     -> [link: packed broadcast join, map-only] -> [canonicalize: CC loop]
     -> node/edge tables partitioned by doc bucket + metrics.
+
+    A refresh pays only for its dirty buckets. The global inputs of the
+    later stages, the corpus symbol table (linking) and the alias set
+    (canonicalize), are merged on the driver from per-bucket state the
+    extract and link writes record while they write (each stage's
+    ``_bucket_state.json``); the triple counts of clean buckets carry
+    over from the previous ``_metrics/triples.json``. An unchanged
+    corpus runs no job past the extract fingerprint.
 
     The returned metrics are also written to ``_metrics/pipeline.json``:
     triple counts per (bucket, pred), ``stage_times``, row totals and
@@ -604,9 +714,10 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
     the same label correctly replays its bucket.
     """
     from .canonicalize import canonicalize_entities
-    from .extract import MENTION_COLS, NODE_COLS, TRIPLE_COLS, extract_docs
-    from .linking import (driver_symbol_table, link_mentions,
-                          qualify_cross_file, symbol_dictionary)
+    from .extract import MENTION_COLS, NODE_COLS, TRIPLE_COLS
+    from .linking import (SYMTAB_SCHEMA, link_mentions,
+                          packed_symbol_dictionary, qualify_cross_file,
+                          symbol_table_rows)
 
     os.makedirs(out_dir, exist_ok=True)
     stage_times: dict = {}
@@ -643,55 +754,58 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
                     .select(*MENTION_COLS, "bucket")
 
     # stage 2: entity linking, bucket-incremental. Linking is bucket-
-    # local (per-occurrence scoring against broadcast dictionaries)
-    # EXCEPT for its one global input, the corpus-level symbol table
-    # (cross-file receiver typing): that table is aggregated once,
-    # collected (it is broadcast-scale by construction — one row per
-    # unambiguous declared class name), and its content fingerprint is
-    # folded into EVERY bucket's fp — so a new class declaration in one
-    # doc correctly re-links all buckets, while a body-only edit
-    # re-links just its own.
+    # local (per-occurrence scoring against the driver-packed
+    # dictionary) EXCEPT for its one global input, the corpus symbol
+    # table (cross-file receiver typing). The driver builds that table
+    # from the class_decl pairs each extract bucket recorded in its
+    # state ledger (no job scans the mentions), ships it as a
+    # LocalRelation, and folds its content fingerprint into EVERY
+    # bucket's fp — so a new class declaration in one doc correctly
+    # re-links all buckets, while a body-only edit re-links just its own.
     t0 = time.time()
-    sym = symbol_dictionary(spark)
+    sym = packed_symbol_dictionary(spark)
     symtab_local = None
     symtab_fp = "xfile=off"
     if xfile_link:
-        symtab_rows, symtab_local = driver_symbol_table(
-            mentions.drop("bucket"))
+        symtab_rows = symbol_table_rows(
+            tuple(pair) for pairs in read_bucket_state(union_path).values()
+            for pair in pairs)
+        symtab_local = local_frame(spark, symtab_rows, SYMTAB_SCHEMA)
         symtab_fp = fingerprint(
             "symtab", *(f"{a}->{b}" for a, b in symtab_rows))
-    linked_bfps = {
-        b: fingerprint("link", bfp, symtab_fp, link_strategy)
-        for b, bfp in extract_bfps.items()}
+    linked_bfps = {b: fingerprint("link", bfp, symtab_fp)
+                   for b, bfp in extract_bfps.items()}
 
     def _link_transform(m: DataFrame) -> DataFrame:
         m = m.drop("bucket")
         if xfile_link:
             m = qualify_cross_file(m, symtab=symtab_local) \
                 .drop("xfile_qualified")
-        # bucket is a pure function of doc_id — recompute after the
-        # linking groupBy instead of threading it through the joins
-        return with_bucket(
-            link_mentions(m, sym, strategy=link_strategy), n_buckets)
+        # bucket is a pure function of doc_id — recompute after linking
+        # instead of threading it through the joins
+        return with_bucket(link_mentions(m, sym), n_buckets)
 
     linked_path = os.path.join(out_dir, "linked")
+    # each bucket's distinct (mention, fqn) alias pairs, as hashes,
+    # ride the link write: the alias set of stage 3
     linked = write_stage_buckets(mentions, linked_path, linked_bfps,
-                                 spark=spark, transform=_link_transform)
+                                 spark=spark, transform=_link_transform,
+                                 state=F.xxhash64("mention", "fqn"))
     stage_times["link"] = round(time.time() - t0, 3)
 
     # stage 3: alias canonicalization. CC is inherently global (a
     # component can span buckets), so it is not bucket-sliced — instead
     # its fingerprint keys on its ACTUAL input, the distinct
-    # (mention, fqn) alias set: an edit that doesn't change any alias
-    # pair (the common body-only edit) skips the CC loop entirely, and
-    # one that does recomputes it, which is the correct global cost.
-    # The check comes BEFORE canonicalize_entities, whose size probe and
-    # driver-side CC run eagerly.
+    # (mention, fqn) alias set, merged on the driver from the linked
+    # buckets' state ledger: an edit that doesn't change any alias pair
+    # (the common body-only edit) skips the CC loop entirely, and one
+    # that does recomputes it from ``linked``, which is the correct
+    # global cost. The check comes BEFORE canonicalize_entities, whose
+    # size probe and driver-side CC run eagerly.
     t0 = time.time()
-    alias_state = (linked.select("mention", "fqn").distinct()
-                   .agg(F.expr("bit_xor(xxhash64(mention, fqn))").alias("h"),
-                        F.count("*").alias("n")).collect()[0])
-    fp3 = fingerprint("canon", alias_state["h"], alias_state["n"])
+    aliases = set().union(*read_bucket_state(linked_path).values())
+    fp3 = fingerprint("canon", functools.reduce(operator.xor, aliases, 0),
+                      len(aliases))
     canon_path = os.path.join(out_dir, "canonical")
     if not stage_is_current(canon_path, fp3):
         write_stage(canonicalize_entities(linked), canon_path, fp3,
@@ -703,7 +817,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
     # extracted content (node rows are a projection; edge dedup keys
     # start with doc_id, so dedup never crosses a bucket).
     t0 = time.time()
-    nodes_out = write_stage_buckets(
+    write_stage_buckets(
         nodes, os.path.join(out_dir, "nodes"),
         {b: fingerprint("nodes", bfp) for b, bfp in extract_bfps.items()},
         spark=spark)
@@ -722,13 +836,15 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
                 .repartition(F.col("bucket"),
                              F.pmod(F.xxhash64("doc_id"), F.lit(4))))
 
-    edges_out = write_stage_buckets(
-        triples, os.path.join(out_dir, "edges"),
-        {b: fingerprint("edges", bfp) for b, bfp in extract_bfps.items()},
-        spark=spark, transform=_edge_transform)
+    edges_path = os.path.join(out_dir, "edges")
+    edges_bfps = {b: fingerprint("edges", bfp)
+                  for b, bfp in extract_bfps.items()}
+    carried, recount = _carry_triple_counts(out_dir, edges_path, edges_bfps)
+    edges_out = write_stage_buckets(triples, edges_path, edges_bfps,
+                                    spark=spark, transform=_edge_transform)
     stage_times["materialize"] = round(time.time() - t0, 3)
 
-    metrics = write_metrics(edges_out, out_dir)
+    metrics = write_metrics(edges_out, out_dir, carried, recount)
     metrics["stage_times"] = stage_times
     metrics["kernel"] = kernel
     metrics["nodes"] = stage_rows(os.path.join(out_dir, "nodes"))
@@ -1045,6 +1161,19 @@ def read_stage_as_of(spark: SparkSession, path: str,
     return spark.read.parquet(*dirs)
 
 
+def require_one_row_per_key(rows: DataFrame, key_cols: list) -> None:
+    """MERGE's cardinality rule: a batch may carry at most one row per
+    key. Two rows for one key would leave the merged row to chance, so
+    the batch raises ``ValueError`` before anything is written, as
+    Iceberg's MERGE raises "multiple source rows matched"."""
+    dup = (rows.groupBy(*key_cols).agg(F.count("*").alias("_n"))
+           .filter(F.col("_n") > 1).limit(1).collect())
+    if dup:
+        key = {c: dup[0][c] for c in key_cols}
+        raise ValueError(f"MERGE batch carries {dup[0]['_n']} rows for key "
+                         f"{key}: a batch may carry at most one row per key")
+
+
 def merge_stage_buckets(spark: SparkSession, path: str,
                         updates: DataFrame, key_cols: list,
                         delete_col: Optional[str] = None,
@@ -1070,6 +1199,9 @@ def merge_stage_buckets(spark: SparkSession, path: str,
     lands on a table a backfill job later overwrites). The commit logs
     one ``merge`` snapshot with matched/inserted/deleted counts.
 
+    A batch may carry at most one row per key (``require_one_row_per_key``):
+    a duplicate raises ``ValueError`` and the table stays unchanged.
+
     Scale shape: bucket assignment is the stage's own hash rule, so
     update rows prune to their buckets before any join; the
     anti/semi joins run only over affected buckets' rows, hashed on
@@ -1084,6 +1216,7 @@ def merge_stage_buckets(spark: SparkSession, path: str,
               else F.lit(False)).alias("_is_del")
     upd = upd.select(*[c for c in upd.columns if c != delete_col],
                      is_del).localCheckpoint(eager=True)
+    require_one_row_per_key(upd, key_cols)
     affected = sorted(r["bucket"] for r in
                       upd.select("bucket").distinct().collect())
     if not affected:

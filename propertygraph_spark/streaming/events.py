@@ -232,9 +232,10 @@ def streaming_link_mentions(docs_stream: DataFrame,
                             symbol_dict: DataFrame) -> DataFrame:
     """Incremental KG construction, extract + link: the fused Arrow
     kernel per micro-batch, then entity linking as a stream-static
-    BROADCAST join against a per-simple-name packed dictionary with the
-    argmax folded INSIDE the row — no groupBy, no streaming state, so
-    the query stays append-mode at 10^12 docs.
+    BROADCAST join against the driver-packed per-simple-name dictionary
+    (``symbol_dict``, from linking.packed_dictionary) with the argmax
+    folded INSIDE the row — no groupBy, no streaming state, so the
+    query stays append-mode at 10^12 docs.
 
     This IS the batch ``packed`` strategy (pipeline.linking
     .link_mentions) applied to a streaming frame — the in-row
@@ -588,12 +589,16 @@ def streaming_upsert_sink(stream_df: DataFrame, path: str,
     table size. State is the table itself — the streaming query
     carries NO state store at all (contrast streaming_latest_state,
     which keeps one row per key in memory: this sink is the durable,
-    table-backed version of the same convergence)."""
+    table-backed version of the same convergence).
+
+    A micro-batch may carry at most one row per key: a duplicate raises
+    ``ValueError`` before the batch writes anything, on the bootstrap
+    batch as on every merge (``materialize.require_one_row_per_key``)."""
     import os
 
     from propertygraph_spark.pipeline.materialize import (
-        _append_snapshot, merge_stage_buckets, snapshot_history,
-        with_bucket)
+        _append_snapshot, merge_stage_buckets, require_one_row_per_key,
+        snapshot_history, with_bucket)
 
     bfrom = bucket_from or key_cols[0]
 
@@ -607,6 +612,7 @@ def streaming_upsert_sink(stream_df: DataFrame, path: str,
             # first batch bootstraps the stage: plain keyed write of
             # the non-delete rows (merge needs an existing state file)
             import json as _json
+            require_one_row_per_key(bdf, key_cols)
             os.makedirs(path, exist_ok=True)
             base = bdf
             if delete_col:

@@ -134,3 +134,32 @@ def test_try_end_line_is_before_first_catch():
     nodes, _ = extract(src)
     tr = [n for n in nodes if n["text"].startswith("try ")][0]
     assert tr["start_line"] == 3 and tr["end_line"] == 5
+
+
+def test_kernel_pauses_gc_and_restores_caller_state():
+    """extract_document_columns pauses the cyclic collector for the
+    document and gives the caller's gc state back on every exit path:
+    a normal doc, a malformed doc and a node-budget doc. The rows do
+    not depend on the collector."""
+    import gc
+
+    from propertygraph_spark.kernel.extract import extract_document_columns
+    docs = [("ok", wrap("int y = x + 1;\nif (y > 2) { y = y * 3; }"), {}),
+            ("bad", "class X { int", {}),
+            ("budget", wrap("\n".join(f"int v{i} = {i};" for i in range(50))),
+             {"max_nodes": 20})]
+    seen = {}
+    for enabled in (True, False):
+        (gc.enable if enabled else gc.disable)()
+        try:
+            for doc_id, src, kw in docs:
+                out = extract_document_columns(doc_id, src, **kw)
+                assert gc.isenabled() is enabled, (doc_id, enabled)
+                seen.setdefault(doc_id, []).append(out)
+        finally:
+            gc.enable()
+    assert seen["ok"][0][3] is None and seen["ok"][0][1]["subj"]
+    assert seen["bad"][0][3] is not None
+    assert "node budget" in seen["budget"][0][3]
+    for doc_id, (with_gc, without_gc) in seen.items():
+        assert with_gc == without_gc, doc_id

@@ -9,7 +9,9 @@ from pyspark.sql import functions as F
 from propertygraph_spark.ops import similarity
 from propertygraph_spark.pipeline.canonicalize import (canonicalize_entities,
                                                        connected_components)
-from propertygraph_spark.pipeline.linking import link_mentions, symbol_dictionary
+from propertygraph_spark.pipeline.linking import (link_mentions,
+                                                  packed_symbol_dictionary,
+                                                  symbol_dictionary)
 
 
 import pytest as _pytest
@@ -24,7 +26,7 @@ def test_cross_file_receiver_qualification(spark):
     where the raw simple-name suffix would have matched a wrong-package
     twin."""
     from propertygraph_spark.kernel.extract import extract_document
-    from propertygraph_spark.pipeline.linking import (DICT_SCHEMA,
+    from propertygraph_spark.pipeline.linking import (packed_dictionary,
                                                       qualify_cross_file)
     src_a = ("package org.acme.gadget;\n"
              "class Widget { public int spin() { return 1; } }")
@@ -51,7 +53,7 @@ def test_cross_file_receiver_qualification(spark):
     # A-declared fqn
     dict_rows = [("net.fake.Widget.spin", "spin", "method", 0.6),
                  ("org.acme.gadget.Widget.spin", "spin", "method", 0.5)]
-    sym = spark.createDataFrame(dict_rows, DICT_SCHEMA)
+    sym = packed_dictionary(spark, dict_rows)
     raw = {r["fqn"] for r in link_mentions(
         mdf.filter(F.col("kind") == "call_site"), sym).collect()}
     assert "net.fake.Widget.spin" in raw  # the miss without the pass
@@ -112,7 +114,8 @@ def test_salted_join_matches_broadcast(spark):
     sym = symbol_dictionary(spark, n_symbols=200)
     a = link_mentions(mentions, sym, strategy="broadcast").collect()
     b = link_mentions(mentions, sym, strategy="salted", salt=4).collect()
-    c = link_mentions(mentions, sym, strategy="packed").collect()
+    c = link_mentions(mentions, packed_symbol_dictionary(spark, 200),
+                      strategy="packed").collect()
     key = lambda r: (r["doc_id"], r["node_id"])
     canon = lambda rs: sorted((key(r), r["fqn"], r["score"]) for r in rs)
     assert canon(a) == canon(b)
@@ -143,7 +146,7 @@ def test_host_scorer_matches_spark_scorer(spark):
               " mention string, kind string, candidate string")
     got = {(r["doc_id"], r["node_id"]): (r["fqn"], r["score"])
            for r in link_mentions(
-               mentions, symbol_dictionary(spark)).collect()}
+               mentions, packed_symbol_dictionary(spark)).collect()}
     want = {}
     for doc_id, _m, node_id, mention, _kind, candidate in occs:
         best = _host_best_link(mention, candidate, rows)

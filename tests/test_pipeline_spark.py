@@ -7,6 +7,7 @@ deterministic fixture corpus — the Spark half of SURVEY.md §5.3.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
@@ -405,6 +406,20 @@ def test_downstream_stages_replay_only_dirty_buckets(spark, tmp_path):
     assert m4["canonical_entities"] == fresh4["canonical_entities"]
 
 
+def _alias_corpus(spark, lit: int):
+    """Ten docs with a real alias component ("trim" -> two fqns); doc5's
+    body carries ``lit``, so changing it is a body-only edit."""
+    from propertygraph_spark.pipeline.fixtures import DOCS_SCHEMA
+    texts = {
+        "str": "class S { int f(String s) { return s.trim().length(); } }",
+        "txt": "import org.acme.util.Text; class T { int g(Text t) "
+               "{ t.trim(); return 1; } }",
+        **{f"doc{i}": f"class C{i} {{ int m(int a) {{ return a + "
+                      f"{lit if i == 5 else i}; }} }}" for i in range(8)}}
+    return spark.createDataFrame(
+        [(d, [("code", t, "", 0)]) for d, t in texts.items()], DOCS_SCHEMA)
+
+
 def test_body_only_edit_skips_cc_and_sums_kernel_telemetry(spark, tmp_path):
     """A body-only edit leaves the alias set as it was, so the refresh
     must not run the CC stage at all (CC_LAST_STATS untouched, no new
@@ -412,20 +427,11 @@ def test_body_only_edit_skips_cc_and_sums_kernel_telemetry(spark, tmp_path):
     _metrics/pipeline.json covering exactly the docs of the dirty
     buckets, and no extracted/_runmetrics table is written."""
     from propertygraph_spark.pipeline import canonicalize
-    from propertygraph_spark.pipeline.fixtures import DOCS_SCHEMA
     from propertygraph_spark.pipeline.materialize import (snapshot_history,
                                                           with_bucket)
 
     def mk(lit: int):
-        texts = {
-            "str": "class S { int f(String s) { return s.trim().length(); } }",
-            "txt": "import org.acme.util.Text; class T { int g(Text t) "
-                   "{ t.trim(); return 1; } }",
-            **{f"doc{i}": f"class C{i} {{ int m(int a) {{ return a + "
-                          f"{lit if i == 5 else i}; }} }}" for i in range(8)}}
-        return spark.createDataFrame(
-            [(d, [("code", t, "", 0)]) for d, t in texts.items()],
-            DOCS_SCHEMA)
+        return _alias_corpus(spark, lit)
 
     out = str(tmp_path / "kg")
     canonicalize.CC_LAST_STATS.clear()
@@ -457,6 +463,163 @@ def test_body_only_edit_skips_cc_and_sums_kernel_telemetry(spark, tmp_path):
     m3 = run_pipeline(spark, mk(99), out, n_buckets=8)      # no-op
     assert m3["kernel"] == {"batches": 0, "docs": 0, "rows": 0, "sec": 0.0}
     assert not os.path.exists(os.path.join(out, "extracted", "_runmetrics"))
+
+
+@contextlib.contextmanager
+def _spark_jobs(spark, group: str):
+    """Collects the ids of the Spark jobs the block runs (job group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    ids: list = []
+    try:
+        yield ids
+    finally:
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _table(spark, path: str, drop=("bucket",)) -> list:
+    return sorted(map(tuple, spark.read.parquet(path)
+                      .drop(*drop).collect()))
+
+
+def test_refresh_runs_no_job_over_a_clean_bucket(spark, tmp_path):
+    """A refresh pays only for its dirty buckets. A no-op refresh runs
+    at most 3 Spark jobs (the extract fingerprint) and rewrites no data
+    file. A one-bucket body-only edit runs no job over a clean bucket:
+    every clean bucket's extracted, linked and edges files are replaced
+    by garbage during it, so a scan of any of them would fail. It still
+    equals a fresh cold build."""
+    import glob as globmod
+    import shutil
+
+    from propertygraph_spark.pipeline.materialize import with_bucket
+
+    def mk(lit: int):
+        return _alias_corpus(spark, lit)
+
+    out = str(tmp_path / "kg")
+    m1 = run_pipeline(spark, mk(5), out, n_buckets=8)
+
+    def data_files():
+        return {p: os.path.getmtime(p) for p in
+                globmod.glob(f"{out}/**/*.parquet", recursive=True)}
+
+    before = data_files()
+    with _spark_jobs(spark, "noop_refresh") as jobs:
+        m2 = run_pipeline(spark, mk(5), out, n_buckets=8)
+    assert len(jobs) <= 3, jobs
+    assert data_files() == before
+    assert m2["total"] == m1["total"]
+    assert m2["triples_by_bucket_pred"] == m1["triples_by_bucket_pred"]
+
+    (dirty,) = {r["bucket"] for r in with_bucket(
+        mk(99).filter(F.col("doc_id") == "doc5"), 8).collect()}
+    saved = str(tmp_path / "saved")
+    clean = [p for p in before
+             if f"bucket={dirty}" not in p
+             and os.path.relpath(p, out).split(os.sep)[0]
+             in ("extracted", "linked", "edges")]
+    assert clean
+    for p in clean:
+        keep = os.path.join(saved, os.path.relpath(p, out))
+        os.makedirs(os.path.dirname(keep), exist_ok=True)
+        shutil.copy2(p, keep)
+        with open(p, "wb") as f:
+            f.write(b"not parquet")
+    with _spark_jobs(spark, "body_edit_refresh") as jobs:
+        m3 = run_pipeline(spark, mk(99), out, n_buckets=8)
+    assert jobs and m3["stage_times"]["extract_dirty_buckets"] == 1
+    for p in clean:
+        shutil.copy2(os.path.join(saved, os.path.relpath(p, out)), p)
+
+    fresh = str(tmp_path / "fresh")
+    m4 = run_pipeline(spark, mk(99), fresh, n_buckets=8)
+    assert m3["triples_by_bucket_pred"] == m4["triples_by_bucket_pred"]
+    for stage in ("linked", "nodes", "edges"):
+        assert _table(spark, os.path.join(out, stage)) == \
+            _table(spark, os.path.join(fresh, stage)), stage
+    assert _table(spark, os.path.join(out, "canonical"), ()) == \
+        _table(spark, os.path.join(fresh, "canonical"), ())
+
+
+def test_driver_state_tracks_refresh_sequence(spark, tmp_path):
+    """The per-bucket state ledgers stay equal to what a scan of the
+    committed stages gives through a refresh sequence: add a class
+    declaration, make a simple name ambiguous, delete a doc so its
+    bucket is removed, make a dirty bucket come back empty. After each
+    step the driver-built symbol table equals ``corpus_symbol_table``
+    over the extracted mentions, the merged alias set equals the
+    distinct (mention, fqn) hashes of ``linked``, no ledger keeps an
+    entry for a bucket without data, and the canonical and edges
+    tables equal a fresh cold build."""
+    from propertygraph_spark.pipeline.fixtures import DOCS_SCHEMA
+    from propertygraph_spark.pipeline.linking import (corpus_symbol_table,
+                                                      symbol_table_rows)
+    from propertygraph_spark.pipeline.materialize import (read_bucket_state,
+                                                          with_bucket)
+
+    n_buckets = 4
+    by_bucket: dict = {}
+    for r in with_bucket(spark.createDataFrame(
+            [(f"d{i}",) for i in range(40)], "doc_id string"),
+            n_buckets).collect():
+        by_bucket.setdefault(r["bucket"], []).append(r["doc_id"])
+    b_solo, b_gone, b_use, b_other = sorted(by_bucket)
+    solo, gone = by_bucket[b_solo][0], by_bucket[b_gone][0]
+    use, other = by_bucket[b_use][0], by_bucket[b_other][0]
+    texts = {
+        gone: "package org.acme; class Widget { int spin() { return 1; } }",
+        solo: "package p1; class Gizmo { int poke() { return 2; } }",
+        use: "class UseSite { int f(Widget w, Gizmo g) { w.spin(); "
+             "return g.poke(); } }",
+        by_bucket[b_use][1]:
+            "class S { int f(String s) { return s.trim().length(); } }",
+        other: "import org.acme.util.Text; class T { int g(Text t) "
+               "{ t.trim(); return 1; } }",
+    }
+
+    def check(step: str) -> dict:
+        docs = spark.createDataFrame(
+            [(d, [("code", t, "", 0)]) for d, t in texts.items()],
+            DOCS_SCHEMA)
+        out = str(tmp_path / "kg")
+        run_pipeline(spark, docs, out, n_buckets=n_buckets)
+        extracted = os.path.join(out, "extracted")
+        linked = os.path.join(out, "linked")
+        decls = read_bucket_state(extracted)
+        mentions = spark.read.parquet(extracted) \
+            .filter(F.col("row_kind") == "mention")
+        assert symbol_table_rows(
+            tuple(p) for ps in decls.values() for p in ps) == sorted(
+            map(tuple, corpus_symbol_table(mentions).collect())), step
+        aliases = read_bucket_state(linked)
+        assert set().union(*aliases.values()) == {
+            r[0] for r in spark.read.parquet(linked)
+            .select(F.xxhash64("mention", "fqn")).distinct().collect()}, step
+        for path, state in ((extracted, decls), (linked, aliases)):
+            on_disk = {d.split("=", 1)[1] for _r, dirs, _f in os.walk(path)
+                       for d in dirs if d.startswith("bucket=")}
+            assert set(state) <= on_disk, (step, path)
+        fresh = str(tmp_path / f"fresh_{step}")
+        run_pipeline(spark, docs, fresh, n_buckets=n_buckets)
+        assert _table(spark, os.path.join(out, "canonical"), ()) == \
+            _table(spark, os.path.join(fresh, "canonical"), ()), step
+        assert _table(spark, os.path.join(out, "edges")) == \
+            _table(spark, os.path.join(fresh, "edges")), step
+        return decls
+
+    decls = check("cold")
+    assert [p for ps in decls.values() for p in ps if p[0] == "Gizmo"]
+    texts[other] = ("import org.acme.util.Text; class T { int g(Text t) "
+                    "{ t.trim(); return 1; } } class Fresh { }")
+    assert ["Fresh", "Fresh"] in check("class_decl_added")[str(b_other)]
+    texts[by_bucket[b_other][1]] = "package p2; class Gizmo { }"
+    check("gizmo_ambiguous")
+    del texts[gone]
+    assert str(b_gone) not in check("bucket_removed")
+    texts[solo] = ""
+    assert str(b_solo) not in check("bucket_empty")
 
 
 def test_dirty_bucket_drops_vanished_row_kinds(spark, tmp_path):
@@ -979,6 +1142,42 @@ def test_merge_stage_buckets_upsert_insert_delete(spark, tmp_path):
     assert snaps[-1]["operation"] == "merge"
     assert snaps[-1]["matched"] == 1
     assert audit_bucket_stage(path)["ok"]
+
+
+def test_merge_stage_buckets_rejects_intra_batch_duplicate_keys(spark,
+                                                                tmp_path):
+    """A MERGE batch carrying two update rows for one key raises like
+    Iceberg's "multiple source rows matched" instead of keeping one of
+    them by chance, and the table, its bucket state and its snapshot
+    log stay exactly as they were."""
+    import glob as globmod
+
+    from propertygraph_spark.pipeline.materialize import (
+        merge_stage_buckets, snapshot_history, with_bucket,
+        write_stage_buckets)
+
+    base = with_bucket(spark.createDataFrame(
+        [(i, f"v{i}") for i in range(20)], "doc_id long, val string"), 4)
+    path = str(tmp_path / "stage")
+    write_stage_buckets(base, path, {b: "v1" for b in range(4)},
+                        spark=spark)
+
+    def state():
+        files = {p: os.path.getmtime(p) for p in
+                 globmod.glob(f"{path}/**/*.parquet", recursive=True)}
+        with open(os.path.join(path, "_buckets.json")) as f:
+            return files, json.load(f), snapshot_history(path)
+
+    before = state()
+    upd = spark.createDataFrame(
+        [(3, "first", False), (3, "second", False), (11, "new", False)],
+        "doc_id long, val string, is_del boolean")
+    with pytest.raises(ValueError, match="at most one row per key"):
+        merge_stage_buckets(spark, path, upd, ["doc_id"],
+                            delete_col="is_del", n_buckets=4)
+    assert state() == before
+    got = {r["doc_id"]: r["val"] for r in spark.read.parquet(path).collect()}
+    assert got == {i: f"v{i}" for i in range(20)}
 
 
 def test_read_changes_between_cdc(spark, tmp_path):

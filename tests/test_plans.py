@@ -527,24 +527,23 @@ def test_packed_linking_is_map_only(spark):
     """Entity linking's packed strategy: one broadcast hash join + an
     in-row argmax fold — the 10^12-row mention table must NOT shuffle
     (the legacy broadcast strategy pays a full occurrence-keyed
-    exchange for its max_by; packed exchanges only the tiny dictionary
-    pre-grouping)."""
-    from propertygraph_spark.pipeline.linking import (link_mentions,
-                                                      symbol_dictionary)
+    exchange for its max_by), and since the dictionary is packed on
+    the driver, no exchange at all besides the broadcast of that
+    LocalRelation: no groupBy over the dictionary stays in the plan."""
+    import re
+
+    from propertygraph_spark.pipeline.linking import (
+        link_mentions, packed_symbol_dictionary)
     mentions = spark.createDataFrame(
         [("d1", "m0", 1, "String", "call_site", "String()")],
         "doc_id string, method_id string, node_id long, mention string,"
         " kind string, candidate string")
-    p = plan(link_mentions(mentions, symbol_dictionary(spark, 200)))
+    p = plan(link_mentions(mentions, packed_symbol_dictionary(spark, 200)))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
-    # the only exchanges allowed are on the dictionary side (simple_name
-    # pre-grouping + broadcast); mention columns never key an exchange
-    assert "hashpartitioning(doc_id" not in p
-    assert "hashpartitioning(node_id" not in p
-    import re
-    keys = re.findall(r"hashpartitioning\(([^,)]*)", p)
-    assert all(k.startswith("simple_name") for k in keys), keys
+    assert "BroadcastExchange" in p and "LocalTableScan" in p
+    assert not re.search(r"\bExchange\b", p), p       # no shuffle
+    assert "HashAggregate" not in p and "hashpartitioning" not in p, p
 
 
 def test_dsir_sample_broadcast_ratio_single_doc_exchange(spark, docs):
@@ -788,34 +787,37 @@ def test_r5s9_new_op_plan_shapes(spark, docs):
 
 
 def test_driver_held_tables_plan_as_local_relations(spark, tmp_path):
-    """Tables the driver already holds (symbol dictionary, corpus symbol
-    table, the driver-path CC map, empty-stage readers) must plan as an
-    Arrow-backed LocalRelation: a PythonRDD / LogicalRDD source would
-    start Python workers in a job of its own only to unpickle rows the
-    driver already has — the fixed cost local_frame removes from every
-    run_pipeline call. A silent fallback to createDataFrame(list) fails
-    here."""
+    """Tables the driver already holds (flat and driver-packed symbol
+    dictionaries, the corpus symbol table built on the driver from
+    class_decl pairs, the driver-path CC map, empty-stage readers) must
+    plan as an Arrow-backed LocalRelation: a PythonRDD / LogicalRDD
+    source would start Python workers in a job of its own only to
+    unpickle rows the driver already has — the fixed cost local_frame
+    removes from every run_pipeline call. A silent fallback to
+    createDataFrame(list) fails here."""
     from propertygraph_spark.pipeline.canonicalize import \
         connected_components
     from propertygraph_spark.pipeline.fixtures import DOCS_SCHEMA
-    from propertygraph_spark.pipeline.linking import (driver_symbol_table,
-                                                      symbol_dictionary)
+    from propertygraph_spark.pipeline.linking import (
+        SYMTAB_SCHEMA, packed_symbol_dictionary, symbol_dictionary,
+        symbol_table_rows)
     from propertygraph_spark.pipeline.materialize import (
         extract_incremental, write_stage_buckets)
+    from propertygraph_spark.pipeline.session import local_frame
 
-    mentions = spark.createDataFrame(
-        [("d1", "m", 1, "Text", "class_decl", "org.acme.Text"),
-         ("d2", "m", 2, "Util", "class_decl", "org.acme.Util")],
-        "doc_id string, method_id string, node_id long, mention string,"
-        " kind string, candidate string")
-    rows, symtab = driver_symbol_table(mentions)
+    rows = symbol_table_rows([("Text", "org.acme.Text"),
+                              ("Util", "org.acme.Util"),
+                              ("Text", "org.acme.Text"),
+                              ("Gizmo", "p1.Gizmo"), ("Gizmo", "p2.Gizmo")])
     assert rows == [("Text", "org.acme.Text"), ("Util", "org.acme.Util")]
+    symtab = local_frame(spark, rows, SYMTAB_SCHEMA)
     edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
                                   "src long, dst long")
     empty = spark.createDataFrame([], "doc_id long, bucket long")
     no_docs = spark.createDataFrame([], DOCS_SCHEMA)
     tables = {
         "symbol_dictionary": symbol_dictionary(spark),
+        "packed_dictionary": packed_symbol_dictionary(spark),
         "symbol_table": symtab,
         "cc_driver_path": connected_components(edges),
         "empty_bucket_stage": write_stage_buckets(

@@ -408,8 +408,8 @@ def test_streaming_link_mentions_matches_batch(spark, tmp_path):
     aggregation, across micro-batch boundaries."""
     from propertygraph_spark.ops.kgdocs import docs_with_spans
     from propertygraph_spark.pipeline.extract import extract_docs, split_union
-    from propertygraph_spark.pipeline.linking import (link_mentions,
-                                                      symbol_dictionary)
+    from propertygraph_spark.pipeline.linking import (
+        link_mentions, packed_symbol_dictionary)
     from propertygraph_spark.streaming.events import (
         run_to_memory, streaming_link_mentions)
     docs = spark.createDataFrame(
@@ -421,7 +421,7 @@ def test_streaming_link_mentions_matches_batch(spark, tmp_path):
         .write.parquet(f"{src}/f1")
     spans.filter("CAST(doc_id AS INT) % 2 = 1").coalesce(1) \
         .write.parquet(f"{src}/f2")
-    sym = symbol_dictionary(spark, 500)
+    sym = packed_symbol_dictionary(spark, 500)
     schema = ("doc_id string, spans array<struct<kind:string,text:string,"
               "media_ref:string,offset:int>>")
     stream = (spark.readStream.schema(schema)
@@ -996,3 +996,27 @@ def test_streaming_upsert_sink_keys_buckets_beside_doc_id(spark, tmp_path):
     by_doc = with_bucket(got.drop("bucket"), 4).select(*got.columns)
     assert got.exceptAll(by_k).count() == 0
     assert got.exceptAll(by_doc).count() > 0
+
+
+def test_streaming_upsert_sink_bootstrap_rejects_duplicate_keys(spark,
+                                                                tmp_path):
+    """The bootstrap micro-batch runs MERGE's cardinality check too: two
+    rows for one key fail the query with the ValueError before any
+    table file or state is written."""
+    import os
+
+    from propertygraph_spark.streaming.events import streaming_upsert_sink
+
+    schema = "k long, val string"
+    src = str(tmp_path / "src.parquet")
+    out = str(tmp_path / "table")
+    spark.createDataFrame([(1, "a1"), (1, "a2"), (2, "b1")], schema) \
+        .coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = streaming_upsert_sink(stream, out, str(tmp_path / "ck"), ["k"],
+                              n_buckets=4)
+    with pytest.raises(Exception, match="at most one row per key"):
+        q.awaitTermination(60)
+    assert not os.path.exists(os.path.join(out, "_buckets.json"))
+    assert not any(d.startswith("bucket=") for d in
+                   (os.listdir(out) if os.path.isdir(out) else []))
