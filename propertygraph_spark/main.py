@@ -209,6 +209,8 @@ def main(argv=None) -> int:
     if not (args.input_dir or args.input_parquet):
         ap.error("one of --input-dir/--input-parquet is required "
                  "(or --audit)")
+    if args.input_dir and not os.path.isdir(args.input_dir):
+        ap.error(f"--input-dir {args.input_dir!r} is not a directory")
 
     from propertygraph_spark.pipeline.session import get_spark
     spark = get_spark("propertygraph_spark", cpus=args.cpus)

@@ -10,7 +10,10 @@ ast/PEASTVisitor.java:64-80). Code spans are newline-terminated so span
 boundaries never split a line.
 
 Corpora:
-- the 11 reference fixture programs embedded verbatim (golden docs);
+- the 11 reference fixture programs (golden docs), read verbatim at run
+  time from ``REFERENCE_TESTCASE_DIR``, the reference checkout's
+  ``testcase/`` directory; the sources are not in this repository, and
+  where they are absent the golden docs are left out with a warning;
 - seeded synthetic Java covering every StatementInfo category
   (pe/StatementInfo.java:166-187) for scale;
 - a pathological mega-doc bucket (one doc, many methods) to exercise
@@ -22,6 +25,7 @@ from __future__ import annotations
 import glob
 import os
 import random
+import warnings
 from typing import Dict, Iterator, List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,6 +84,15 @@ def _interleave(rng: random.Random, code_text: str) -> List[Tuple[str, str, str,
 
 
 def reference_fixture_rows(seed: int = 42) -> List[Tuple[str, list]]:
+    """One golden doc per ``.java`` file in ``REFERENCE_TESTCASE_DIR``.
+    Warns, naming the directory, when none of the 11 fixture sources is
+    there: the result is then missing every golden doc."""
+    if not any(os.path.isfile(os.path.join(REFERENCE_TESTCASE_DIR, name))
+               for name in _FIXTURE_DOC_IDS):
+        warnings.warn(
+            f"none of the {len(_FIXTURE_DOC_IDS)} reference fixture sources "
+            f"is in {REFERENCE_TESTCASE_DIR}; the docs table gets no golden "
+            "fx-* docs", stacklevel=2)
     rng = random.Random(seed)
     rows = []
     for path in sorted(glob.glob(os.path.join(REFERENCE_TESTCASE_DIR, "*.java"))):

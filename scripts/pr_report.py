@@ -11,6 +11,11 @@ prove each §2.4-2.6 rule). Edge identity = (pred, subj text+lines, obj
 text+lines, label) — the identity the reference DOT output exposes
 (cfg/node/CFGNode.java:175-188).
 
+The fixture sources are read from FIXDIR, the reference's testcase
+directory; they are not in this repository. Both modes walk the fixture
+names in the golden file and exit non-zero, writing nothing, when any of
+those sources is missing.
+
 Usage:
     python scripts/pr_report.py              # report + write PR_REPORT.md
     python scripts/pr_report.py --freeze     # regenerate the golden file
@@ -18,7 +23,6 @@ Usage:
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
@@ -68,13 +72,30 @@ def deserialize(rows: list) -> Counter:
     return Counter({tuple(r[:-1]): r[-1] for r in rows})
 
 
-def compute(write_md: bool = True) -> dict:
+def load_golden() -> dict:
     with open(GOLDEN_PATH) as f:
-        golden = {k: deserialize(v) for k, v in json.load(f).items()}
+        return json.load(f)
+
+
+def fixture_paths(names) -> list:
+    """The source path of every golden fixture, in name order. Raises
+    FileNotFoundError naming the missing files, so an absent corpus fails
+    the gate instead of measuring nothing."""
+    paths = [os.path.join(FIXDIR, name) for name in sorted(names)]
+    missing = [p for p in paths if not os.path.isfile(p)]
+    if missing:
+        raise FileNotFoundError(
+            f"{len(missing)} of {len(paths)} golden fixture sources "
+            f"missing: {', '.join(missing)}")
+    return paths
+
+
+def compute(write_md: bool = True) -> dict:
+    golden = {k: deserialize(v) for k, v in load_golden().items()}
     inter: Counter = Counter()
     got_n: Counter = Counter()
     want_n: Counter = Counter()
-    for path in sorted(glob.glob(f"{FIXDIR}/*.java")):
+    for path in fixture_paths(golden):
         name = os.path.basename(path)
         got = edge_multiset(path)
         want = golden[name]
@@ -130,8 +151,10 @@ def compute(write_md: bool = True) -> dict:
 
 
 def freeze() -> None:
+    """Regenerate the goldens for the fixtures they already name; refuses
+    to write unless every one of those sources is present."""
     golden = {}
-    for path in sorted(glob.glob(f"{FIXDIR}/*.java")):
+    for path in fixture_paths(load_golden()):
         golden[os.path.basename(path)] = serialize(edge_multiset(path))
     with open(GOLDEN_PATH, "w") as f:
         json.dump(golden, f, indent=0)
@@ -140,12 +163,16 @@ def freeze() -> None:
 
 
 if __name__ == "__main__":
-    if "--freeze" in sys.argv:
-        freeze()
-    else:
+    try:
+        if "--freeze" in sys.argv:
+            freeze()
+            sys.exit(0)
         rep = compute()
-        ok = all(r["precision"] >= 0.95 and r["recall"] >= 0.95
-                 for r in rep.values())
-        print(json.dumps(rep, indent=2))
-        print("PASS" if ok else "FAIL")
-        sys.exit(0 if ok else 1)
+    except FileNotFoundError as exc:
+        sys.exit(f"FAIL: {exc}")
+    # an empty report measured nothing: that is not a pass
+    ok = bool(rep) and all(r["precision"] >= 0.95 and r["recall"] >= 0.95
+                           for r in rep.values())
+    print(json.dumps(rep, indent=2))
+    print("PASS" if ok else "FAIL")
+    sys.exit(0 if ok else 1)

@@ -1,21 +1,31 @@
 """PDG construction rules per SURVEY.md §2.6
 (reference: /root/reference/src/main/java/com/tinypdg/pdg/PDG.java)."""
 
+import os
+
 from conftest import edge_set, wrap
+
+from propertygraph_spark.pipeline.fixtures import (
+    REFERENCE_TESTCASE_DIR as FIXDIR)
 
 
 def pdg(src):
     return edge_set(src, "pdg")
 
 
-GUARD_NEW = open("/root/reference/testcase/FilenameGuardFilterNew.java").read()
+def fixture_source(name):
+    """One reference fixture program, read where the reference keeps it;
+    the tests that need one fail with FileNotFoundError naming the path
+    when it is absent."""
+    with open(os.path.join(FIXDIR, name)) as f:
+        return f.read()
 
 
 def test_guard_new_golden():
     """FIXTURES.md §5 worked golden, adjusted for PDG edge dedup by
     (from, to, type): only one data label survives per node pair
     (PDGEdge.compareTo ignores the variable)."""
-    e = pdg(GUARD_NEW)
+    e = pdg(fixture_source("FilenameGuardFilterNew.java"))
     s1 = 'String guarded = filename.replace(":","_");'
     s2 = 'guarded = FileSystems.getDefault().getPath(guarded).normalize().toString();'
     c = "if LOG.isDebugEnabled()"
@@ -139,7 +149,7 @@ def test_uppercase_names_not_field_aliased():
 def test_shadowing_scopes():
     """MyTest.test5 semantics: inner redeclaration of x shadows the
     parameter; inner defs don't flow to the outer variable's uses."""
-    src = open("/root/reference/testcase/MyTest.java").read()
+    src = fixture_source("MyTest.java")
     e = pdg(src)
     # x = 1 (outer def) reaches the first println inside the bare block
     # (the block is one CFG node), but data edges are node-level here
@@ -168,7 +178,7 @@ def test_data_edge_dedup_matches_reference_treeset():
     (receiver of .replace) and defs `guarded`; both reach LOG.debug(...),
     but only the `filename` edge (name-ordered first) survives."""
     from propertygraph_spark.kernel.extract import extract_document
-    src = open("/root/reference/testcase/FilenameGuardFilterOld.java").read()
+    src = fixture_source("FilenameGuardFilterOld.java")
     nodes, triples, _, err = extract_document("fx", src)
     assert err is None
     id2 = {n["node_id"]: n["text"] for n in nodes}

@@ -61,8 +61,9 @@ def test_span_sequence_invariant(spark, corpus):
     bad = joined.filter(
         F.size("spans") != F.size("seq")).count()
     assert bad == 0
-    # spot-check one doc end-to-end in python
-    row = joined.filter(F.col("doc_id") == "fx-mytest").collect()[0]
+    # spot-check one doc end-to-end in python: a synthetic doc, always in
+    # the corpus, its span rows shuffled by the same _interleave
+    row = joined.filter(F.col("doc_id") == "doc-00000000").collect()[0]
     spans_sorted = sorted(
         ((s["offset"], s["kind"], s["text"], s["media_ref"])
          for s in row["spans"]))
@@ -1228,3 +1229,19 @@ def test_read_changes_between_cdc(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(KeyError):
         read_changes_between(spark, out, hist2[-1]["snapshot_id"], tomb)
+
+
+def test_reference_fixture_rows_warns_without_sources(tmp_path, monkeypatch):
+    """No fixture source in the directory -> a warning naming it, not a
+    silent empty golden corpus; one source present -> its doc, no warning."""
+    import warnings
+
+    from propertygraph_spark.pipeline import fixtures
+    monkeypatch.setattr(fixtures, "REFERENCE_TESTCASE_DIR", str(tmp_path))
+    with pytest.warns(UserWarning, match=str(tmp_path)):
+        assert fixtures.reference_fixture_rows() == []
+    (tmp_path / "MyTest.java").write_text("class MyTest {}\n")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        rows = fixtures.reference_fixture_rows()
+    assert [doc_id for doc_id, _ in rows] == ["fx-mytest"]
