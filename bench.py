@@ -355,8 +355,7 @@ def main() -> None:
     out_dir = "/tmp/bench_pipeline"
     shutil.rmtree(out_dir, ignore_errors=True)
     t0 = time.monotonic()
-    pipe_metrics = run_pipeline(spark, src, out_dir,
-                                docs_fingerprint=f"bench-{sf}")
+    pipe_metrics = run_pipeline(spark, src, out_dir)
     results["pipeline_full"] = round(time.monotonic() - t0, 3)
     extras["pipeline_triples"] = pipe_metrics["total"]
     extras["pipeline_stage_times"] = pipe_metrics["stage_times"]

@@ -8,7 +8,7 @@ pipeline:
                   program-element tree, def/use dataflow, CFG, PDG).  Runs
                   inside Arrow-vectorized UDFs; no Spark dependency.
 - ``pipeline``  : Spark plumbing — docs-table scan, fused extraction stage,
-                  entity linking (salted broadcast join), connected-components
+                  entity linking (packed broadcast join), connected-components
                   canonicalization, partitioned materialization with
                   manifest-based checkpoint/resume.
 - ``ops``       : large-scale training-data operators (dedup, similarity

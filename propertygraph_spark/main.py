@@ -171,6 +171,7 @@ def main(argv=None) -> int:
         return 0
     if args.sql:
         from pyspark.sql import SparkSession
+        from propertygraph_spark.pipeline.materialize import read_stage
         from propertygraph_spark.pipeline.session import get_spark
         # only stop a session WE created (in-process callers — tests,
         # notebooks — own theirs; get_spark is getOrCreate)
@@ -184,7 +185,7 @@ def main(argv=None) -> int:
                 if not os.path.isdir(p):
                     continue
                 try:
-                    spark.read.parquet(p).createOrReplaceTempView(stage)
+                    read_stage(spark, p).createOrReplaceTempView(stage)
                     n_views += 1
                 except Exception as exc:  # unreadable stage: name it
                     print(f"sql: skipping view {stage}: {exc}")
@@ -217,17 +218,13 @@ def main(argv=None) -> int:
     try:
         if args.input_dir:
             docs = _docs_from_dir(spark, args.input_dir)
-            docs_fp = f"dir:{args.input_dir}"
         else:
             docs = spark.read.parquet(args.input_parquet)
-            docs_fp = f"parquet:{args.input_parquet}"
 
         from propertygraph_spark.pipeline.materialize import run_pipeline
         graphs = tuple(g for g in args.graphs.split(",") if g)
         metrics = run_pipeline(spark, docs, args.out,
-                               n_buckets=args.buckets,
-                               docs_fingerprint=docs_fp,
-                               graphs=graphs)
+                               n_buckets=args.buckets, graphs=graphs)
         print(f"triples={metrics['total']} nodes={metrics['nodes']} "
               f"stages={metrics['stage_times']}")
 

@@ -4,19 +4,12 @@ north_star: "Entity linking scores candidate symbol mentions against a
 broadcast dictionary of fully-qualified declarations (salted hash join to
 absorb hot symbols like java.lang.String)".
 
-Three join strategies are provided (``link_mentions``):
-- ``packed`` (default, the one production runs): the dictionary is packed
-  on the driver to one row per simple name carrying its candidate array
-  (``packed_dictionary``), shipped as an Arrow-backed ``LocalRelation``
-  and broadcast-joined; the argmax is an in-row fold, so the stage is
-  map-only and hot names cause no skew;
-- ``broadcast``: the flat dictionary broadcast-joined per candidate, then
-  a max_by aggregation keyed on the mention occurrence;
-- ``salted``: when the dictionary outgrows broadcast, the sort-merge path
-  suffers hot keys (java.lang.String-class names dominate Zipf-style).
-  The mention side gets salt = pmod(xxhash64(doc_id, node_id), S) and the
-  dictionary is replicated xS with explode(sequence(...)), turning one hot
-  key into S evenly-sized keys.
+``link_mentions`` has one join strategy: the dictionary is packed on the
+driver to one row per simple name carrying its candidate array
+(``packed_dictionary``), shipped as an Arrow-backed ``LocalRelation`` and
+broadcast-joined; the argmax is an in-row fold, so the stage is map-only
+and hot names such as java.lang.String cause no skew (one dictionary row
+however popular the name), which is what the salted join was for.
 """
 
 from __future__ import annotations
@@ -29,13 +22,6 @@ from pyspark.sql.types import (ArrayType, DoubleType, StringType, StructField,
                                StructType)
 
 from .session import local_frame
-
-DICT_SCHEMA = StructType([
-    StructField("fqn", StringType(), False),
-    StructField("simple_name", StringType(), False),
-    StructField("sym_kind", StringType(), False),
-    StructField("weight", DoubleType(), False),
-])
 
 PACKED_DICT_SCHEMA = StructType([
     StructField("simple_name", StringType(), False),
@@ -61,8 +47,8 @@ def symbol_rows(n_symbols: int = 2000,
     pure Python, shared by the Spark dictionary AND the DuckDB oracle
     freezer (ops/kgdocs.linked_oracle_sql), which replays the scoring
     host-side. Weights are pairwise-distinct WITHIN every simple-name
-    group — the only place ties would matter (max_by picks an unspecified
-    row on ties, which would break the replay): the hot/method/twin
+    group — the only place ties would matter (a tied argmax need not
+    pick the row the replay picks): the hot/method/twin
     blocks use name sets or denominator ranges disjoint from the generic
     pool."""
     rng = random.Random(seed)
@@ -79,7 +65,7 @@ def symbol_rows(n_symbols: int = 2000,
     # multi-node components to merge. Denominators 100000+ sit beyond the
     # generic pool's range (1/(i+10), i < n_symbols), so these weights are
     # truly pairwise-distinct from EVERY other entry — score ties would
-    # make max_by order-dependent and break the host-side oracle replay.
+    # make the argmax order-dependent and break the host-side replay.
     for i, name in enumerate(("trim", "put", "getValue", "length")):
         rows.append((f"org.acme.util.Text.{name}", name, "method",
                      1.0 / (100000 + i)))
@@ -92,19 +78,11 @@ def symbol_rows(n_symbols: int = 2000,
     return rows
 
 
-def symbol_dictionary(spark: SparkSession, n_symbols: int = 2000,
-                      seed: int = 42) -> DataFrame:
-    """Deterministic symbol dictionary with Zipf-ish weights; head keys are
-    made deliberately hot, and the synthetic corpus' method/class names are
-    included so linking produces matches."""
-    return local_frame(spark, symbol_rows(n_symbols, seed), DICT_SCHEMA)
-
-
 def packed_dictionary(spark: SparkSession, rows) -> DataFrame:
     """Dictionary rows (fqn, simple_name, sym_kind, weight) packed on the
     driver to one row per simple name, ``(simple_name, cands)`` with
     ``cands`` its (fqn, weight) array, as an Arrow-backed
-    ``LocalRelation``: the input of the ``packed`` strategy. The
+    ``LocalRelation``: the input of ``link_mentions``. The
     dictionary is a driver-held constant, so packing it here keeps the
     groupBy shuffle (and its jobs) out of every linking plan."""
     by_name: dict = {}
@@ -115,7 +93,10 @@ def packed_dictionary(spark: SparkSession, rows) -> DataFrame:
 
 def packed_symbol_dictionary(spark: SparkSession, n_symbols: int = 2000,
                              seed: int = 42) -> DataFrame:
-    """``symbol_dictionary`` packed for the ``packed`` strategy."""
+    """The deterministic symbol dictionary (``symbol_rows``: Zipf-ish
+    weights, deliberately hot head keys, and the synthetic corpus'
+    method/class names so linking produces matches), packed for
+    ``link_mentions``."""
     return packed_dictionary(spark, symbol_rows(n_symbols, seed))
 
 
@@ -169,8 +150,7 @@ _XFILE_RE = r"^([A-Z][A-Za-z0-9_$]*)\.[A-Za-z_$][A-Za-z0-9_$]*\(\)$"
 
 
 def qualify_cross_file(mentions: DataFrame,
-                       symtab: DataFrame | None = None,
-                       broadcast_table: bool = True) -> DataFrame:
+                       symtab: DataFrame | None = None) -> DataFrame:
     """Rewrite call-site candidates whose receiver type the kernel left
     unqualified (``Recv.m()``) to the corpus-declared fqn
     (``org.acme.Recv.m()``) when exactly one class named ``Recv`` is
@@ -181,18 +161,14 @@ def qualify_cross_file(mentions: DataFrame,
 
     Scale shape: the symbol table broadcasts (one row per declared class
     name); the probe is a map-side broadcast-hash join against the
-    extracted receiver name — no shuffle added to the linking stage. For
-    a corpus whose class-name universe outgrows broadcast, pass
-    ``broadcast_table=False`` for a shuffled hash join (build side is
-    still 1 row per key; AQE absorbs probe-side hot names)."""
+    extracted receiver name — no shuffle added to the linking stage."""
     if symtab is None:
         symtab = corpus_symbol_table(mentions)
     recv = F.when(F.col("kind") == "call_site",
                   F.regexp_extract("candidate", _XFILE_RE, 1)) \
             .otherwise(F.lit(""))
     m = mentions.withColumn("recv_simple", recv)
-    tab = F.broadcast(symtab) if broadcast_table else symtab
-    joined = m.join(tab.withColumnRenamed("recv_simple", "rs"),
+    joined = m.join(F.broadcast(symtab).withColumnRenamed("recv_simple", "rs"),
                     (F.col("recv_simple") == F.col("rs"))
                     & (F.col("recv_simple") != ""), "left")
     hit = (F.col("decl_fqn").isNotNull()
@@ -208,8 +184,7 @@ def qualify_cross_file(mentions: DataFrame,
             .drop("rs", "decl_fqn", "recv_simple"))
 
 
-def link_mentions(mentions: DataFrame, symbol_dict: DataFrame,
-                  strategy: str = "packed", salt: int = 16) -> DataFrame:
+def link_mentions(mentions: DataFrame, symbol_dict: DataFrame) -> DataFrame:
     """mentions(doc_id, method_id, node_id, mention, kind, candidate)
     -> linked rows with the best-scored fqn per mention occurrence.
 
@@ -221,81 +196,39 @@ def link_mentions(mentions: DataFrame, symbol_dict: DataFrame,
         apiName resolution ("Text.trim()" -> org.acme.util.Text.trim);
     +0.25 when the candidate merely has call form for this simple name
         (ends with ``name()``) — weak evidence that still prefers
-        method-kind fqns. Exact string compares (right()/concat), no LIKE
-        wildcards, so the host replay is bit-identical.
+        method-kind fqns. Exact string compares, no LIKE wildcards, so
+        the host replay is bit-identical.
 
-    Strategies:
-    - ``packed`` (default, r5): ``symbol_dict`` is the driver-packed
-      dictionary (``packed_dictionary``: ONE row per simple name
-      carrying a (fqn, weight) candidate array); each mention
-      occurrence broadcast-joins exactly one row and the argmax is an
-      in-row ``array_max`` over scored structs. MAP-ONLY — no
-      exchange besides the dictionary's broadcast, so the 10^12-row
-      mention table never shuffles, and hot simple names cause no
-      skew by construction (one dictionary row regardless of
-      popularity). Weights are pairwise-distinct within a simple-name
-      group (symbol_rows docstring), so the argmax is tie-free and all
-      three strategies are row-identical (pinned in
-      tests/test_linking_canon.py). Stateless, so the streaming path
-      reuses it verbatim.
-    - ``broadcast``: ``symbol_dict`` is the flat dictionary
-      (``DICT_SCHEMA``); broadcast join + max_by aggregation (one
-      occurrence-keyed shuffle).
-    - ``salted``: the shuffle-join variant for a flat dictionary too
-      large to broadcast; the salt spreads hot simple names over
-      ``salt`` partitions."""
+    ``symbol_dict`` is the driver-packed dictionary (``packed_dictionary``:
+    ONE row per simple name carrying a (fqn, weight) candidate array);
+    an unpacked one raises ``ValueError``. Each mention occurrence
+    broadcast-joins exactly one row and the argmax is an in-row
+    ``array_max`` over scored structs. MAP-ONLY — no exchange besides
+    the dictionary's broadcast, so the 10^12-row mention table never
+    shuffles, and hot simple names cause no skew by construction.
+    Weights are pairwise-distinct within a simple-name group
+    (symbol_rows docstring), so the argmax is tie-free and matches the
+    host replay row for row (pinned in tests/test_linking_canon.py).
+    Stateless, so the streaming path reuses it verbatim."""
+    if "cands" not in symbol_dict.columns:
+        raise ValueError("link_mentions takes a packed dictionary "
+                         "(linking.packed_dictionary)")
     m = mentions.withColumn("simple_name", F.col("mention"))
-    if strategy == "packed":
-        if "cands" not in symbol_dict.columns:
-            raise ValueError("the packed strategy takes a packed "
-                             "dictionary (linking.packed_dictionary)")
-        joined = m.join(F.broadcast(symbol_dict), "simple_name", "inner")
-        # one SQL expression: built from Column lambdas, the same fold
-        # took some 350 more py4j round trips to plan
-        stem = "substring(candidate, 1, length(candidate) - 2)"
-        best = F.expr(
-            "array_max(transform(cands, x -> named_struct('score', x.weight"
-            " + CASE WHEN candidate IS NOT NULL"
-            " AND endswith(candidate, '()')"
-            f" AND (x.fqn = {stem} OR endswith(x.fqn, concat('.', {stem})))"
-            " THEN 0.5D ELSE 0.0D END"
-            " + CASE WHEN candidate IS NOT NULL"
-            " AND endswith(candidate, concat(simple_name, '()'))"
-            " AND endswith(x.fqn, simple_name) THEN 0.25D ELSE 0.0D END,"
-            " 'fqn', x.fqn)))")
-        return (joined.withColumn("best", best)
-                .select("doc_id", "method_id", "node_id", "mention", "kind",
-                        F.col("best.fqn").alias("fqn"),
-                        F.col("best.score").alias("score")))
-    if strategy == "broadcast":
-        joined = m.join(F.broadcast(symbol_dict), "simple_name", "inner")
-    elif strategy == "salted":
-        s = F.pmod(F.xxhash64("doc_id", "node_id"), F.lit(salt)).cast("int")
-        m_salted = m.withColumn("salt", s)
-        d_rep = symbol_dict.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        joined = m_salted.join(d_rep, ["simple_name", "salt"], "inner") \
-                         .drop("salt")
-    else:
-        raise ValueError(strategy)
-
+    joined = m.join(F.broadcast(symbol_dict), "simple_name", "inner")
+    # one SQL expression: built from Column lambdas, the same fold
+    # took some 350 more py4j round trips to plan
     stem = "substring(candidate, 1, length(candidate) - 2)"
-    typed_hit = (
-        F.col("candidate").isNotNull()
-        & F.expr("right(candidate, 2) = '()'")
-        & F.expr(f"(fqn = {stem} OR "
-                 f"right(fqn, length({stem}) + 1) = concat('.', {stem}))"))
-    call_form = (
-        F.col("candidate").isNotNull()
-        & F.expr("right(candidate, length(simple_name) + 2)"
-                 " = concat(simple_name, '()')")
-        & F.expr("right(fqn, length(simple_name)) = simple_name"))
-    scored = joined.withColumn(
-        "score",
-        F.col("weight")
-        + F.when(typed_hit, F.lit(0.5)).otherwise(F.lit(0.0))
-        + F.when(call_form, F.lit(0.25)).otherwise(F.lit(0.0)))
-    # best candidate per mention occurrence — max_by avoids a window shuffle
-    return (scored.groupBy("doc_id", "method_id", "node_id", "mention", "kind")
-            .agg(F.max_by("fqn", "score").alias("fqn"),
-                 F.max("score").alias("score")))
+    best = F.expr(
+        "array_max(transform(cands, x -> named_struct('score', x.weight"
+        " + CASE WHEN candidate IS NOT NULL"
+        " AND endswith(candidate, '()')"
+        f" AND (x.fqn = {stem} OR endswith(x.fqn, concat('.', {stem})))"
+        " THEN 0.5D ELSE 0.0D END"
+        " + CASE WHEN candidate IS NOT NULL"
+        " AND endswith(candidate, concat(simple_name, '()'))"
+        " AND endswith(x.fqn, simple_name) THEN 0.25D ELSE 0.0D END,"
+        " 'fqn', x.fqn)))")
+    return (joined.withColumn("best", best)
+            .select("doc_id", "method_id", "node_id", "mention", "kind",
+                    F.col("best.fqn").alias("fqn"),
+                    F.col("best.score").alias("score")))

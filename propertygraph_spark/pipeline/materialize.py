@@ -212,6 +212,77 @@ def _bucket_diff(path: str, bucket_fps: dict) -> tuple:
     return current, dirty, removed
 
 
+def _state_fingerprint(bucket_fps: dict) -> str:
+    """Digest of a stage's whole ``{bucket: fp}`` state, in bucket order."""
+    return fingerprint(*(f"{b}={bucket_fps[b]}"
+                         for b in sorted(bucket_fps, key=int)))
+
+
+def _commit_buckets(rows: Optional[DataFrame], path: str, parts: list,
+                    rewritten: list, removed: list, *aggs,
+                    keep=None) -> dict:
+    """The one commit of a bucket-partitioned stage: ``rows``, the new
+    rows of the ``rewritten`` buckets partitioned by ``parts`` (ending
+    in ``bucket``), replace those buckets' partition dirs by dynamic
+    partition overwrite, so clean buckets' dirs are untouched on disk.
+
+    The partition tuples present in ``rows`` (``parts``) and the
+    caller's extra ``aggs`` are observed during the write job, with no
+    second pass. Rows for which ``keep`` is false are observed but not
+    written. Dynamic overwrite replaces only the partitions it sees, so
+    a partition dir of a rewritten bucket that came back without rows
+    would survive as phantom rows: it is purged against the observed
+    set, as are the dirs of ``removed`` buckets, AFTER the write
+    commits (purging first would lose the old rows if the write
+    failed). The session's overwrite mode is restored whatever
+    happens. Returns the observed values, ``{}`` when no bucket is
+    rewritten (``rows`` is then unused)."""
+    import glob
+    import shutil
+    got: dict = {}
+    if rewritten:
+        from pyspark.sql import Observation
+        spark = rows.sparkSession
+        obs = Observation(f"commit_{os.path.basename(path)}")
+        observed = rows.observe(
+            obs, F.collect_set(F.struct(*parts)).alias("parts"), *aggs)
+        if keep is not None:
+            observed = observed.filter(keep)
+        mode = "spark.sql.sources.partitionOverwriteMode"
+        mode0 = spark.conf.get(mode, "static")
+        spark.conf.set(mode, "dynamic")
+        try:
+            observed.write.mode("overwrite").partitionBy(*parts).parquet(path)
+        finally:
+            spark.conf.set(mode, mode0)
+        got = obs.get
+    present = {tuple(str(v) for v in r) for r in got.get("parts", [])}
+    gone = {str(b) for b in removed}
+    for b in [*rewritten, *removed]:
+        pattern = os.path.join(glob.escape(path), *["*"] * (len(parts) - 1),
+                               f"bucket={b}")
+        for bdir in glob.glob(pattern):
+            values = tuple(d.split("=", 1)[1] for d in
+                           os.path.relpath(bdir, path).split(os.sep))
+            if str(b) in gone or values not in present:
+                shutil.rmtree(bdir)
+    return got
+
+
+def _read_buckets(spark: SparkSession, path: str, schema,
+                  infer: bool = False) -> DataFrame:
+    """Reader over a bucket-partitioned stage, pinned to ``schema`` so
+    no schema-inference job runs (``infer`` reads the footers' schema
+    instead). A stage with no partition dir (empty corpus, every bucket
+    removed or deleted) reads as an empty ``schema`` LocalRelation
+    instead of failing."""
+    names = set(schema.fieldNames())
+    dirs = os.listdir(path) if os.path.isdir(path) else []
+    if not any(d.split("=", 1)[0] in names for d in dirs if "=" in d):
+        return local_frame(spark, [], schema)
+    return (spark.read if infer else spark.read.schema(schema)).parquet(path)
+
+
 def write_stage_buckets(df: DataFrame, path: str, bucket_fps: dict,
                         spark: Optional[SparkSession] = None,
                         transform=None, state=None) -> DataFrame:
@@ -230,56 +301,28 @@ def write_stage_buckets(df: DataFrame, path: str, bucket_fps: dict,
     recomputed — ``df`` is filtered on its int ``bucket`` column BEFORE
     ``transform`` runs, so partition pruning reaches the upstream scan
     and per-bucket work (linking joins, dedup shuffles) happens only
-    for dirty data — and replaced via dynamic partition overwrite.
-    A dirty bucket that produces zero rows has its stale dir purged
-    (same phantom rule as extract_incremental). ``state``, a Column
-    over the written rows, is observed per bucket during the write job
-    and kept in the stage's ``_bucket_state.json`` ledger
+    for dirty data — and committed by ``_commit_buckets``, the dynamic
+    partition overwrite extract_incremental shares, which also purges
+    the stale dir of a dirty bucket that produces zero rows. ``state``,
+    a Column over the written rows, is observed per bucket during the
+    write job and kept in the stage's ``_bucket_state.json`` ledger
     (``read_bucket_state``), so a global consumer merges it on the
     driver instead of rescanning the stage. Returns a reader over the
     full stage output, pinned to the written schema."""
-    import shutil
     spark = spark or df.sparkSession
     os.makedirs(path, exist_ok=True)
     current, dirty, removed = _bucket_diff(path, bucket_fps)
-    out_schema = None
+    sub = None
     if dirty:
-        from pyspark.sql import Observation
         sub = df.filter(F.col("bucket").isin([int(b) for b in dirty]))
         if transform is not None:
             sub = transform(sub)
-        out_schema = sub.schema
-        # the bucket set PRESENT in the new data, observed during the
-        # write job (no second pass): dynamic overwrite only replaces
-        # partitions it sees, so a dirty bucket that came back empty
-        # must be purged explicitly — AFTER the write commits
-        obs = Observation(f"stage_buckets_{os.path.basename(path)}")
-        aggs = [F.collect_set("bucket").alias("parts")]
-        if state is not None:
-            aggs.append(F.collect_set(F.struct("bucket", state))
-                        .alias("state"))
-        observed = sub.observe(obs, *aggs)
-        mode0 = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                               "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            observed.write.mode("overwrite").partitionBy("bucket") \
-                    .parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", mode0)
-        present = {int(b) for b in obs.get["parts"]}
-        for b in dirty:
-            if int(b) not in present:
-                stale = os.path.join(path, f"bucket={b}")
-                if os.path.isdir(stale):
-                    shutil.rmtree(stale)
-    for b in removed:
-        target = os.path.join(path, f"bucket={b}")
-        if os.path.isdir(target):
-            shutil.rmtree(target)
+    aggs = [] if state is None else [
+        F.collect_set(F.struct("bucket", state)).alias("state")]
+    got = _commit_buckets(sub, path, ["bucket"], dirty, removed, *aggs)
     if state is not None:
         _commit_bucket_state(path, current, dirty, removed,
-                             obs.get["state"] if dirty else [])
+                             got.get("state", []))
     if dirty or removed:
         # a stage that previously committed via full-overwrite manifests
         # must not leave the stale _manifest.json behind — the audit
@@ -301,18 +344,14 @@ def write_stage_buckets(df: DataFrame, path: str, bucket_fps: dict,
             if name.endswith(".parquet") and os.path.isfile(full):
                 os.remove(full)
         _append_snapshot(
-            path, "dynamic-overwrite",
-            fingerprint(*(f"{b}={current[b]}"
-                          for b in sorted(current, key=int))),
+            path, "dynamic-overwrite", _state_fingerprint(current),
             {"dirty_buckets": [int(b) for b in dirty],
              "removed_buckets": [int(b) for b in removed]})
     with open(os.path.join(path, "_buckets.json"), "w") as f:
         json.dump(current, f)
-    if out_schema is None:      # nothing written: plan the transform once
-        out_schema = (transform(df) if transform is not None else df).schema
-    if not any(d.startswith("bucket=") for d in os.listdir(path)):
-        return local_frame(spark, [], out_schema)
-    return spark.read.schema(out_schema).parquet(path)
+    if sub is None:             # nothing written: plan the transform once
+        sub = transform(df) if transform is not None else df
+    return _read_buckets(spark, path, sub.schema)
 
 
 def stage_rows(path: str) -> int:
@@ -517,117 +556,63 @@ def extract_incremental(spark: SparkSession, docs: DataFrame, path: str,
 
     from .extract import UNION_SCHEMA, extract_docs
 
-    current = bucket_fingerprints(docs, n_buckets)
-    current = {b: f"{fp}:{'+'.join(sorted(graphs))}:v{_LOGIC_VERSION}"
-               for b, fp in current.items()}
-    content_state = fingerprint(*(f"{b}={current[b]}"
-                                  for b in sorted(current)))
-    manifest_file = os.path.join(path, "_buckets.json")
-    previous: dict = {}
-    try:
-        with open(manifest_file) as f:
-            previous = {int(k): v for k, v in json.load(f).items()}
-    except (OSError, ValueError):
-        pass
-    dirty = sorted(b for b, fp in current.items() if previous.get(b) != fp)
-    removed = sorted(b for b in previous if b not in current)
-    kernel = {"batches": 0, "docs": 0, "rows": 0, "sec": 0.0}
-    decls: list = []
-
+    graphs_tag = f"{'+'.join(sorted(graphs))}:v{_LOGIC_VERSION}"
+    current, dirty, removed = _bucket_diff(path, {
+        b: f"{fp}:{graphs_tag}"
+        for b, fp in bucket_fingerprints(docs, n_buckets).items()})
+    content_state = _state_fingerprint(current)
+    union = None
     if dirty:
-        from pyspark.sql import Observation
-
-        bucketed = with_bucket(docs, n_buckets)
-        subset = bucketed.filter(F.col("bucket").isin(dirty)).drop("bucket")
-        union = with_bucket(extract_docs(subset, graphs=graphs), n_buckets)
-        # Three driver-side facts must come out of the kernel pass without
-        # running it twice: (a) the exact (row_kind, bucket) partition
-        # set PRESENT in the new data — dynamic overwrite only replaces
-        # partitions it sees, so a row_kind that vanished from a dirty
-        # bucket (its only malformed doc got fixed -> no error rows)
-        # would survive as phantom rows unless purged against this set;
-        # (b) the per-batch metric rows, which are RUN telemetry, not
-        # content — they must not churn an unrelated bucket dir (their
-        # doc_id is synthetic); the driver sums them into typed counters;
-        # (c) the class_decl pairs of each dirty bucket, the bucket's
-        # share of the corpus symbol table (state ledger).
-        # An Observation computes all three DURING the write job (collect_set/
-        # collect_list skip the when()-nulls), so the kernel streams
-        # straight into the shuffle — no localCheckpoint materializing
-        # millions of rows, no second job. It observes AFTER the
-        # shuffle, which the metric rows ride (one per kernel batch):
-        # the shuffle is then never empty, even when every dirty doc
-        # comes back without rows. AQE replaces an empty shuffle and
-        # everything above it by an empty relation, and an Observation
-        # below it would never report. Phantoms are purged only
-        # AFTER the write succeeds — deleting first would destroy the
-        # old buckets if the write job fails, leaving a reader of the
-        # output with silently missing partitions.
-        obs = Observation("extract_parts")
-        observed = union.repartition("row_kind", "bucket").observe(
-            obs,
-            F.collect_set(F.when(F.col("row_kind") != "metric",
-                                 F.struct("row_kind", "bucket")))
-            .alias("parts"),
-            F.collect_list(F.when(F.col("row_kind") == "metric",
-                                  F.col("text")))
-            .alias("metrics"),
-            F.collect_set(F.when(
-                (F.col("row_kind") == "mention")
-                & (F.col("kind") == "class_decl"),
-                F.struct("bucket", F.array("mention", "candidate"))))
-            .alias("decls"))
-        content = observed.filter(F.col("row_kind") != "metric")
-        with_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                                   "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            content.write.mode("overwrite") \
-                   .partitionBy("row_kind", "bucket").parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           with_mode)
-        got = obs.get
-        new_parts = {(r["row_kind"], int(r["bucket"])) for r in got["parts"]}
-        decls = got["decls"]
-        for text in got["metrics"]:        # "docs=<n> rows=<n> sec=<s>"
-            batch = dict(kv.split("=", 1) for kv in text.split())
-            kernel["batches"] += 1
-            kernel["docs"] += int(batch["docs"])
-            kernel["rows"] += int(batch["rows"])
-            kernel["sec"] += float(batch["sec"])
-        kernel["sec"] = round(kernel["sec"], 3)
-        import shutil
-        for kind_dir in os.listdir(path):
-            if not kind_dir.startswith("row_kind="):
-                continue
-            kind = kind_dir.split("=", 1)[1]
-            for b in dirty:
-                if (kind, b) not in new_parts:
-                    stale = os.path.join(path, kind_dir, f"bucket={b}")
-                    if os.path.isdir(stale):
-                        shutil.rmtree(stale)
-    for b in removed:
-        import shutil
-        for kind_dir in os.listdir(path):
-            target = os.path.join(path, kind_dir, f"bucket={b}")
-            if os.path.isdir(target):
-                shutil.rmtree(target)
+        subset = (with_bucket(docs, n_buckets)
+                  .filter(F.col("bucket").isin([int(b) for b in dirty]))
+                  .drop("bucket"))
+        # The commit observes AFTER this shuffle, which the metric rows
+        # ride (one per kernel batch): the shuffle is then never empty,
+        # even when every dirty doc comes back without rows. AQE
+        # replaces an empty shuffle and everything above it by an empty
+        # relation, and an Observation below it would never report.
+        # Co-locating (row_kind, bucket) in one task also keeps the
+        # write from spraying tasks x dirs small files.
+        union = (with_bucket(extract_docs(subset, graphs=graphs), n_buckets)
+                 .repartition("row_kind", "bucket"))
+    # Besides the partition set, two driver-side facts come out of the
+    # kernel pass without running it twice: the per-batch metric rows,
+    # RUN telemetry the driver sums into typed counters (observed, never
+    # written: their doc_id is synthetic and would churn an unrelated
+    # bucket dir), and the class_decl pairs of each dirty bucket, the
+    # bucket's share of the corpus symbol table (state ledger).
+    # collect_set/collect_list skip the when()-nulls.
+    kind = F.col("row_kind")
+    got = _commit_buckets(
+        union, path, ["row_kind", "bucket"], dirty, removed,
+        F.collect_list(F.when(kind == "metric", F.col("text")))
+        .alias("metrics"),
+        F.collect_set(F.when(
+            (kind == "mention") & (F.col("kind") == "class_decl"),
+            F.struct("bucket", F.array("mention", "candidate"))))
+        .alias("decls"),
+        keep=kind != "metric")
+    kernel = {"batches": 0, "docs": 0, "rows": 0, "sec": 0.0}
+    for text in got.get("metrics", []):    # "docs=<n> rows=<n> sec=<s>"
+        batch = dict(kv.split("=", 1) for kv in text.split())
+        kernel["batches"] += 1
+        kernel["docs"] += int(batch["docs"])
+        kernel["rows"] += int(batch["rows"])
+        kernel["sec"] += float(batch["sec"])
+    kernel["sec"] = round(kernel["sec"], 3)
     os.makedirs(path, exist_ok=True)
-    _commit_bucket_state(path, current, dirty, removed, decls)
-    with open(manifest_file, "w") as f:
-        json.dump({str(k): v for k, v in current.items()}, f)
+    _commit_bucket_state(path, current, dirty, removed, got.get("decls", []))
+    with open(os.path.join(path, "_buckets.json"), "w") as f:
+        json.dump(current, f)
+    dirty = [int(b) for b in dirty]
     if dirty or removed:
         _append_snapshot(path, "dynamic-overwrite", content_state, {
-            "dirty_buckets": dirty, "removed_buckets": removed,
+            "dirty_buckets": dirty,
+            "removed_buckets": [int(b) for b in removed],
             "n_buckets": n_buckets})
     schema = StructType(UNION_SCHEMA.fields
                         + [StructField("bucket", IntegerType())])
-    if not any(d.startswith("row_kind=") for d in os.listdir(path)):
-        # empty corpus (or all docs removed): no partition dirs to read
-        return local_frame(spark, [], schema), dirty, content_state, kernel
-    return (spark.read.schema(schema).parquet(path), dirty, content_state,
-            kernel)
+    return _read_buckets(spark, path, schema), dirty, content_state, kernel
 
 
 def write_metrics(edges: DataFrame, out_dir: str, carried: list,
@@ -682,9 +667,7 @@ def _carry_triple_counts(out_dir: str, edges_path: str,
 
 def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
                  n_buckets: int = N_BUCKETS_DEFAULT,
-                 docs_fingerprint: str = "",
-                 graphs: tuple = ("ast", "cfg", "pdg"),
-                 xfile_link: bool = True) -> dict:
+                 graphs: tuple = ("ast", "cfg", "pdg")) -> dict:
     """Full KG-construction pipeline with per-stage checkpoint/resume.
 
     docs -> [extract: map-only Arrow kernel] -> union rows (partitioned by
@@ -706,12 +689,10 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
     telemetry for this run (``{batches, docs, rows, sec}``; docs counts
     the docs of the dirty buckets only).
 
-    ``docs_fingerprint`` is accepted for backward compatibility but
-    IGNORED since the r5 bucket-incremental rework: staleness is keyed
-    purely on per-bucket CONTENT fingerprints (plus the symbol-table /
-    alias-set fingerprints for the global stages), so relabeling an
-    unchanged corpus correctly skips every stage and editing a doc under
-    the same label correctly replays its bucket.
+    Staleness is keyed purely on per-bucket CONTENT fingerprints (plus
+    the symbol-table / alias-set fingerprints for the global stages), so
+    a rerun over an unchanged corpus skips every stage and an edited doc
+    replays its bucket.
     """
     from .canonicalize import canonicalize_entities
     from .extract import MENTION_COLS, NODE_COLS, TRIPLE_COLS
@@ -764,23 +745,17 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, out_dir: str,
     # re-links all buckets, while a body-only edit re-links just its own.
     t0 = time.time()
     sym = packed_symbol_dictionary(spark)
-    symtab_local = None
-    symtab_fp = "xfile=off"
-    if xfile_link:
-        symtab_rows = symbol_table_rows(
-            tuple(pair) for pairs in read_bucket_state(union_path).values()
-            for pair in pairs)
-        symtab_local = local_frame(spark, symtab_rows, SYMTAB_SCHEMA)
-        symtab_fp = fingerprint(
-            "symtab", *(f"{a}->{b}" for a, b in symtab_rows))
+    symtab_rows = symbol_table_rows(
+        tuple(pair) for pairs in read_bucket_state(union_path).values()
+        for pair in pairs)
+    symtab_local = local_frame(spark, symtab_rows, SYMTAB_SCHEMA)
+    symtab_fp = fingerprint("symtab", *(f"{a}->{b}" for a, b in symtab_rows))
     linked_bfps = {b: fingerprint("link", bfp, symtab_fp)
                    for b, bfp in extract_bfps.items()}
 
     def _link_transform(m: DataFrame) -> DataFrame:
-        m = m.drop("bucket")
-        if xfile_link:
-            m = qualify_cross_file(m, symtab=symtab_local) \
-                .drop("xfile_qualified")
+        m = qualify_cross_file(m.drop("bucket"), symtab=symtab_local) \
+            .drop("xfile_qualified")
         # bucket is a pure function of doc_id — recompute after linking
         # instead of threading it through the joins
         return with_bucket(link_mentions(m, sym), n_buckets)
@@ -874,38 +849,11 @@ def compact_stage_buckets(spark: SparkSession, path: str,
     mid-compaction never loses rows (worst case: a stray temp dir the
     next run ignores and the audit flags). Returns
     {bucket: (files_before, files_after)} for the compacted buckets."""
-    import shutil
-    out: dict = {}
-    for name in sorted(os.listdir(path)):
-        if not name.startswith("bucket="):
-            continue
-        bdir = os.path.join(path, name)
-        parts = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
-        if len(parts) < min_files:
-            continue
-        tmp = os.path.join(path, f"_compact_tmp_{name}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        (spark.read.parquet(bdir).coalesce(target_files)
-         .write.mode("overwrite").parquet(tmp))
-        for extra in os.listdir(tmp):       # byte-noise the dirs don't keep
-            if not extra.endswith(".parquet"):
-                os.remove(os.path.join(tmp, extra))
-        shutil.rmtree(bdir)
-        os.rename(tmp, bdir)
-        after = len([f for f in os.listdir(bdir) if f.endswith(".parquet")])
-        out[name.split("=", 1)[1]] = (len(parts), after)
-    if out:
-        try:
-            with open(os.path.join(path, "_buckets.json")) as f:
-                current = json.load(f)
-        except (OSError, ValueError):
-            current = {}
-        _append_snapshot(
-            path, "compaction",
-            fingerprint(*(f"{b}={current[b]}"
-                          for b in sorted(current, key=int))),
-            {"compacted": {b: list(v) for b, v in out.items()}})
-    return out
+    return _rewrite_bucket_files(
+        spark, path, "compaction",
+        lambda rows: rows.coalesce(target_files),
+        lambda out: {"compacted": {b: list(v) for b, v in out.items()}},
+        min_files)
 
 
 def expire_snapshots(path: str, keep_last: int = 10) -> dict:
@@ -1064,43 +1012,64 @@ def zorder_rewrite_buckets(spark: SparkSession, path: str, cols: list,
     predicates. Write-then-swap per bucket (crash-safe, same recipe as
     compaction); commit logged as a ``zorder`` snapshot. Returns
     {bucket: n_files_after}."""
-    import shutil
     mask = (1 << bits) - 1
     zkey = sum(
         (F.shiftright(F.pmod(F.col(c).cast("long"), F.lit(mask + 1)), i)
          .bitwiseAND(1) * F.lit(1 << (len(cols) * i + k)))
         for i in range(bits) for k, c in enumerate(cols)).cast("long")
+    out = _rewrite_bucket_files(
+        spark, path, "zorder",
+        lambda rows: (rows.withColumn("_zkey", zkey)
+                      .repartitionByRange(target_files, "_zkey")
+                      .sortWithinPartitions("_zkey")
+                      .drop("_zkey")),
+        lambda out: {"zorder_cols": list(cols),
+                     "buckets": {b: n for b, (_, n) in out.items()}})
+    return {b: n for b, (_, n) in out.items()}
+
+
+def _rewrite_bucket_files(spark: SparkSession, path: str, operation: str,
+                          rewrite, summary, min_files: int = 0) -> dict:
+    """Write-then-swap layout rewrite of a bucket-incremental stage,
+    shared by compaction and z-ordering: every ``bucket=N`` dir holding
+    >= ``min_files`` part files has ``rewrite`` of its rows written to a
+    sibling temp dir BEFORE the original dir is removed, so a crash
+    mid-rewrite never loses rows (worst case: a stray temp dir the next
+    run ignores and the audit flags). ``_buckets.json`` is untouched,
+    since its fingerprints key on content, not layout. The commit lands
+    in the snapshot log as one ``operation`` entry whose summary is
+    ``summary(out)``. Returns out, {bucket: (files_before,
+    files_after)} for the rewritten buckets."""
+    import shutil
+
+    def n_files(d: str) -> int:
+        return sum(f.endswith(".parquet") for f in os.listdir(d))
+
     out: dict = {}
     for name in sorted(os.listdir(path)):
         if not name.startswith("bucket="):
             continue
         bdir = os.path.join(path, name)
-        tmp = os.path.join(path, f"_zorder_tmp_{name}")
+        before = n_files(bdir)
+        if before < min_files:
+            continue
+        tmp = os.path.join(path, f"_{operation}_tmp_{name}")
         shutil.rmtree(tmp, ignore_errors=True)
-        (spark.read.parquet(bdir)
-         .withColumn("_zkey", zkey)
-         .repartitionByRange(target_files, "_zkey")
-         .sortWithinPartitions("_zkey")
-         .drop("_zkey")
-         .write.mode("overwrite").parquet(tmp))
-        for extra in os.listdir(tmp):
+        rewrite(spark.read.parquet(bdir)).write.mode("overwrite").parquet(tmp)
+        for extra in os.listdir(tmp):       # byte-noise the dirs don't keep
             if not extra.endswith(".parquet"):
                 os.remove(os.path.join(tmp, extra))
         shutil.rmtree(bdir)
         os.rename(tmp, bdir)
-        out[name.split("=", 1)[1]] = len(
-            [f for f in os.listdir(bdir) if f.endswith(".parquet")])
+        out[name.split("=", 1)[1]] = (before, n_files(bdir))
     if out:
         try:
             with open(os.path.join(path, "_buckets.json")) as f:
                 current = json.load(f)
         except (OSError, ValueError):
             current = {}
-        _append_snapshot(
-            path, "zorder",
-            fingerprint(*(f"{b}={current[b]}"
-                          for b in sorted(current, key=int))),
-            {"zorder_cols": list(cols), "buckets": out})
+        _append_snapshot(path, operation, _state_fingerprint(current),
+                         summary(out))
     return out
 
 
@@ -1202,15 +1171,28 @@ def merge_stage_buckets(spark: SparkSession, path: str,
     A batch may carry at most one row per key (``require_one_row_per_key``):
     a duplicate raises ``ValueError`` and the table stays unchanged.
 
+    A path with neither ``_buckets.json`` nor a data file is an empty
+    stage: its current rows are an empty frame of the update's schema,
+    so the first MERGE creates the table. A path holding data files but
+    no ``_buckets.json`` has no committed state to merge into and
+    raises ``ValueError`` (the rule ``audit_bucket_stage`` and
+    ``remove_orphan_files`` apply).
+
     Scale shape: bucket assignment is the stage's own hash rule, so
     update rows prune to their buckets before any join; the
     anti/semi joins run only over affected buckets' rows, hashed on
     the key — a 10^12-row table with a 1000-row merge touches ~1000
     buckets' files and nothing else."""
-    import shutil
     state_file = os.path.join(path, "_buckets.json")
-    with open(state_file) as f:
-        state = json.load(f)
+    try:
+        with open(state_file) as f:
+            state = json.load(f)
+    except FileNotFoundError:
+        if any(name.endswith(".parquet")
+               for _root, _dirs, names in os.walk(path) for name in names):
+            raise ValueError(f"no committed state under {path}: data files "
+                             f"but no _buckets.json") from None
+        state = {}      # nothing committed yet: MERGE into an empty stage
     upd = with_bucket(updates, n_buckets, key=bucket_from)
     is_del = (F.col(delete_col) if delete_col
               else F.lit(False)).alias("_is_del")
@@ -1221,7 +1203,7 @@ def merge_stage_buckets(spark: SparkSession, path: str,
                       upd.select("bucket").distinct().collect())
     if not affected:
         return {"matched": 0, "inserted": 0, "deleted": 0, "buckets": []}
-    cur = (spark.read.parquet(path)
+    cur = (_read_buckets(spark, path, upd.drop("_is_del").schema, infer=True)
            .filter(F.col("bucket").isin(affected)))
     keys = list(key_cols)
     upd_keys = upd.select("bucket", *keys).distinct()
@@ -1240,22 +1222,8 @@ def merge_stage_buckets(spark: SparkSession, path: str,
             upd.filter(~F.col("_is_del")).drop("_is_del")
             .join(cur.select("bucket", *keys).distinct(),
                   ["bucket"] + keys, "left_semi")))
-    from pyspark.sql import Observation
-    obs = Observation(f"merge_{os.path.basename(path)}")
-    observed = new_rows.observe(obs, F.collect_set("bucket").alias("parts"))
-    mode0 = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                           "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        observed.write.mode("overwrite").partitionBy("bucket") \
-                .parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", mode0)
-    present = {int(b) for b in obs.get["parts"]}
-    for b in affected:
-        target = os.path.join(path, f"bucket={b}")
-        if b not in present and os.path.isdir(target):
-            shutil.rmtree(target)
+    got = _commit_buckets(new_rows, path, ["bucket"], affected, [])
+    present = {r["bucket"] for r in got["parts"]}
     for b in affected:
         key = str(b)
         if b in present:

@@ -237,11 +237,10 @@ def streaming_link_mentions(docs_stream: DataFrame,
     folded INSIDE the row — no groupBy, no streaming state, so the
     query stays append-mode at 10^12 docs.
 
-    This IS the batch ``packed`` strategy (pipeline.linking
-    .link_mentions) applied to a streaming frame — the in-row
-    ``array_max`` fold is stateless, so the identical code path serves
-    both; the legacy ``broadcast``/``salted`` strategies end in a
-    max_by aggregation a stream can't run unbounded. Weights are
+    This IS the batch linking (pipeline.linking.link_mentions) applied
+    to a streaming frame — the in-row ``array_max`` fold is stateless,
+    so the identical code path serves both, where a max_by aggregation
+    could not run unbounded on a stream. Weights are
     pairwise-distinct within a simple-name group (linking.symbol_rows
     docstring), so the argmax is tie-free and batch == streaming
     row-for-row (pinned in tests/test_streaming.py). Global CC
@@ -253,7 +252,7 @@ def streaming_link_mentions(docs_stream: DataFrame,
     mentions = (streaming_extract(docs_stream)
                 .filter(F.col("row_kind") == "mention")
                 .select(*MENTION_COLS))
-    return link_mentions(mentions, symbol_dict, strategy="packed")
+    return link_mentions(mentions, symbol_dict)
 
 
 def streaming_near_dedup_strict(docs_stream: DataFrame,
@@ -591,14 +590,16 @@ def streaming_upsert_sink(stream_df: DataFrame, path: str,
     which keeps one row per key in memory: this sink is the durable,
     table-backed version of the same convergence).
 
-    A micro-batch may carry at most one row per key: a duplicate raises
-    ``ValueError`` before the batch writes anything, on the bootstrap
-    batch as on every merge (``materialize.require_one_row_per_key``)."""
+    Every micro-batch, the first one included, is one
+    ``merge_stage_buckets``: the first batch merges into an empty stage
+    (no ``_buckets.json``, no data file), so bootstrap has no write path
+    of its own. A micro-batch may carry at most one row per key: a
+    duplicate raises ``ValueError`` before the batch writes anything
+    (``materialize.require_one_row_per_key``)."""
     import os
 
     from propertygraph_spark.pipeline.materialize import (
-        _append_snapshot, merge_stage_buckets, require_one_row_per_key,
-        snapshot_history, with_bucket)
+        _append_snapshot, merge_stage_buckets, snapshot_history)
 
     bfrom = bucket_from or key_cols[0]
 
@@ -607,29 +608,10 @@ def streaming_upsert_sink(stream_df: DataFrame, path: str,
         if any(s.get("fingerprint") == fp
                for s in snapshot_history(path)):
             return  # replayed, already merged
-        state_file = os.path.join(path, "_buckets.json")
-        if not os.path.exists(state_file):
-            # first batch bootstraps the stage: plain keyed write of
-            # the non-delete rows (merge needs an existing state file)
-            import json as _json
-            require_one_row_per_key(bdf, key_cols)
-            os.makedirs(path, exist_ok=True)
-            base = bdf
-            if delete_col:
-                base = base.filter(~F.col(delete_col)).drop(delete_col)
-            keyed = with_bucket(base, n_buckets, key=bfrom)
-            keyed.write.mode("overwrite").partitionBy("bucket") \
-                 .parquet(path)
-            present = sorted({
-                int(d.split("=", 1)[1]) for d in os.listdir(path)
-                if d.startswith("bucket=")})
-            with open(state_file, "w") as f:
-                _json.dump({str(b): f"upsert:{batch_id}"
-                            for b in present}, f)
-        else:
-            merge_stage_buckets(bdf.sparkSession, path, bdf, key_cols,
-                                delete_col=delete_col,
-                                n_buckets=n_buckets, bucket_from=bfrom)
+        merge_stage_buckets(bdf.sparkSession, path, bdf, key_cols,
+                            delete_col=delete_col,
+                            n_buckets=n_buckets, bucket_from=bfrom)
+        os.makedirs(path, exist_ok=True)  # an empty batch writes nothing
         _append_snapshot(path, "streaming-upsert", fp,
                          {"batch_id": batch_id})
 

@@ -10,8 +10,7 @@ from propertygraph_spark.ops import similarity
 from propertygraph_spark.pipeline.canonicalize import (canonicalize_entities,
                                                        connected_components)
 from propertygraph_spark.pipeline.linking import (link_mentions,
-                                                  packed_symbol_dictionary,
-                                                  symbol_dictionary)
+                                                  packed_symbol_dictionary)
 
 
 import pytest as _pytest
@@ -101,30 +100,37 @@ def test_connected_components_paths_agree(spark):
     assert a == b
 
 
-def test_salted_join_matches_broadcast(spark):
-    """Both linking strategies must produce identical linked rows — the
-    salted path exists for dictionary-scale, not different semantics."""
+def test_packed_link_matches_host_model(spark):
+    """The packed linking fold against the host model of its scoring
+    (ops/kgdocs._host_best_link) on the same dictionary: row-identical
+    INCLUDING the float score (same addition order: weight + typed-hit
+    + call-form); a name the dictionary lacks links to nothing."""
+    from propertygraph_spark.ops.kgdocs import _host_best_link
+    from propertygraph_spark.pipeline.linking import symbol_rows
+    occs = [("d1", "m0", 1, "String", "call_site", "String()"),
+            ("d1", "m0", 2, "put", "call_site", "put()"),
+            ("d2", "m1", 3, "nosuch", "call_site", "nosuch()"),
+            ("d2", "m1", 4, "Integer", "method_decl", "Integer")]
     mentions = spark.createDataFrame(
-        [("d1", "m0", 1, "String", "call_site", "String()"),
-         ("d1", "m0", 2, "put", "call_site", "put()"),
-         ("d2", "m1", 3, "nosuch", "call_site", "nosuch()"),
-         ("d2", "m1", 4, "Integer", "method_decl", "Integer")],
-        "doc_id string, method_id string, node_id long, mention string,"
-        " kind string, candidate string")
-    sym = symbol_dictionary(spark, n_symbols=200)
-    a = link_mentions(mentions, sym, strategy="broadcast").collect()
-    b = link_mentions(mentions, sym, strategy="salted", salt=4).collect()
-    c = link_mentions(mentions, packed_symbol_dictionary(spark, 200),
-                      strategy="packed").collect()
-    key = lambda r: (r["doc_id"], r["node_id"])
-    canon = lambda rs: sorted((key(r), r["fqn"], r["score"]) for r in rs)
-    assert canon(a) == canon(b)
-    # the map-only packed fold is row-identical INCLUDING the float
-    # score (same addition order: weight + typed-hit + call-form)
-    assert canon(a) == canon(c)
-    linked = {r["mention"]: r["fqn"] for r in a}
+        occs, "doc_id string, method_id string, node_id long, mention string,"
+              " kind string, candidate string")
+    got = link_mentions(mentions,
+                        packed_symbol_dictionary(spark, 200)).collect()
+    rows = symbol_rows(200)
+    want = {}
+    for doc_id, _m, node_id, mention, _kind, candidate in occs:
+        best = _host_best_link(mention, candidate, rows)
+        if best is not None:
+            want[(doc_id, node_id)] = best
+    assert {(r["doc_id"], r["node_id"]): (r["fqn"], r["score"])
+            for r in got} == want
+    linked = {r["mention"]: r["fqn"] for r in got}
     assert linked["String"] == "java.lang.String"
     assert "nosuch" not in linked
+    with pytest.raises(ValueError, match="packed dictionary"):
+        link_mentions(mentions, spark.createDataFrame(
+            rows, "fqn string, simple_name string, sym_kind string,"
+                  " weight double"))
 
 
 def test_host_scorer_matches_spark_scorer(spark):

@@ -95,7 +95,7 @@ def test_skew_routing_splits_heavy_docs(spark):
 
 def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path):
     out = str(tmp_path / "kg")
-    m1 = run_pipeline(spark, corpus, out, docs_fingerprint="t1")
+    m1 = run_pipeline(spark, corpus, out)
     assert m1["total"] > 0 and m1["nodes"] > 0
     assert m1["canonical_entities"] > 0
     # metrics written beside the commit
@@ -104,8 +104,8 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path):
     assert persisted["total"] == m1["total"]
     by_pred = {x["pred"] for x in m1["triples_by_bucket_pred"]}
     assert by_pred <= PREDS
-    # resume: unchanged fingerprint -> every stage skipped (fast + same)
-    m2 = run_pipeline(spark, corpus, out, docs_fingerprint="t1")
+    # resume: unchanged corpus -> every stage skipped (fast + same)
+    m2 = run_pipeline(spark, corpus, out)
     assert m2["total"] == m1["total"]
     # outputs partitioned by bucket on disk
     assert any(p.startswith("bucket=") for p in os.listdir(
@@ -291,8 +291,8 @@ def test_incremental_extract_replays_only_dirty_buckets(spark, tmp_path):
 
 
 def test_pipeline_rerun_after_edit_refreshes_downstream(spark, tmp_path):
-    """Editing the input under the SAME caller corpus label must re-run
-    the downstream stages too: stage fingerprints key on the per-bucket
+    """Editing the input into the SAME output dir must re-run the
+    downstream stages too: stage fingerprints key on the per-bucket
     content state, so linked/canonical/edges can never go stale while
     extracted/ moves on (the silent-staleness bug)."""
     from propertygraph_spark.pipeline.fixtures import DOCS_SCHEMA
@@ -305,15 +305,13 @@ def test_pipeline_rerun_after_edit_refreshes_downstream(spark, tmp_path):
         return spark.createDataFrame(rows, DOCS_SCHEMA)
 
     out = str(tmp_path / "kg_edit")
-    m1 = run_pipeline(spark, mk(), out, docs_fingerprint="same-label")
-    # same label, changed content -> everything downstream must refresh
-    m2 = run_pipeline(spark, mk("int b = a * 2;"), out,
-                      docs_fingerprint="same-label")
+    m1 = run_pipeline(spark, mk(), out)
+    # changed content -> everything downstream must refresh
+    m2 = run_pipeline(spark, mk("int b = a * 2;"), out)
     assert m2["total"] > m1["total"]
     # and must equal a from-scratch run over the edited corpus
     fresh = run_pipeline(spark, mk("int b = a * 2;"),
-                         str(tmp_path / "kg_fresh"),
-                         docs_fingerprint="other")
+                         str(tmp_path / "kg_fresh"))
     assert m2["total"] == fresh["total"]
     assert m2["nodes"] == fresh["nodes"]
     assert m2["canonical_entities"] == fresh["canonical_entities"]
@@ -1083,6 +1081,78 @@ def test_read_stage_merges_evolved_schema(spark, tmp_path):
     assert all(e is None for i, e in got if i % 2 == 0)
     assert all(e == len(f"v{i}") for i, e in got if i % 2 == 1)
     assert audit_bucket_stage(path)["ok"]
+
+
+def test_cli_sql_selects_a_column_only_rewritten_buckets_carry(
+        spark, tmp_path, capsys):
+    """--sql registers each stage view through read_stage: a column
+    that only the rewritten bucket of a ``linked`` stage carries is
+    selectable through the CLI. A plain parquet read takes one
+    footer's schema and drops the column."""
+    from propertygraph_spark.main import main as cli_main
+    from propertygraph_spark.pipeline.materialize import write_stage_buckets
+
+    df = spark.createDataFrame([(i, i % 2, f"v{i}") for i in range(8)],
+                               "id long, bucket int, payload string")
+    out = tmp_path / "kg"
+    path = str(out / "linked")
+    write_stage_buckets(df, path, {0: "fp0", 1: "fp1"}, spark=spark)
+    write_stage_buckets(
+        df, path, {0: "fp0", 1: "fp1b"}, spark=spark,
+        transform=lambda sub: sub.withColumn(
+            "extra", F.length("payload").cast("long")))
+    capsys.readouterr()
+    assert cli_main(["--out", str(out), "--sql",
+                     "SELECT id, extra FROM linked WHERE extra IS NOT NULL"
+                     " ORDER BY id"]) == 0
+    printed = capsys.readouterr().out.splitlines()
+    assert printed == ["id\textra", "1\t2", "3\t2", "5\t2", "7\t2",
+                       "(4 rows)"]
+
+
+def test_merge_stage_buckets_into_absent_stage(spark, tmp_path):
+    """A path with neither _buckets.json nor a data file is an empty
+    stage: MERGE inserts exactly the non-delete rows (a delete for a
+    key that is not there deletes nothing), commits _buckets.json for
+    the buckets it wrote and logs one merge snapshot."""
+    from propertygraph_spark.pipeline.materialize import (
+        audit_bucket_stage, merge_stage_buckets, snapshot_history)
+
+    upd = spark.createDataFrame(
+        [(1, "a", False), (2, "b", False), (9, "x", True)],
+        "doc_id long, val string, is_del boolean")
+    path = str(tmp_path / "stage")
+    res = merge_stage_buckets(spark, path, upd, ["doc_id"],
+                              delete_col="is_del", n_buckets=4)
+    assert (res["matched"], res["inserted"], res["deleted"]) == (0, 2, 0)
+    got = spark.read.parquet(path)
+    assert sorted(got.columns) == ["bucket", "doc_id", "val"]
+    assert {(r["doc_id"], r["val"]) for r in got.collect()} == {
+        (1, "a"), (2, "b")}
+    with open(os.path.join(path, "_buckets.json")) as f:
+        state = json.load(f)
+    assert set(state) == {str(r["bucket"]) for r in
+                          got.select("bucket").distinct().collect()}
+    assert all(v.startswith("merge:") for v in state.values())
+    snaps = snapshot_history(path)
+    assert [s["operation"] for s in snaps] == ["merge"]
+    assert snaps[0]["inserted"] == 2
+    assert audit_bucket_stage(path)["ok"]
+
+
+def test_merge_stage_buckets_refuses_data_without_state(spark, tmp_path):
+    """A path that holds data files but no _buckets.json has no
+    committed state to merge into: MERGE raises and writes nothing."""
+    from propertygraph_spark.pipeline.materialize import merge_stage_buckets
+
+    path = str(tmp_path / "stage")
+    spark.createDataFrame([(1, "a")], "doc_id long, val string") \
+        .write.parquet(path)
+    before = sorted(os.listdir(path))
+    upd = spark.createDataFrame([(2, "b")], "doc_id long, val string")
+    with pytest.raises(ValueError, match="no committed state"):
+        merge_stage_buckets(spark, path, upd, ["doc_id"], n_buckets=4)
+    assert sorted(os.listdir(path)) == before
 
 
 def test_merge_stage_buckets_upsert_insert_delete(spark, tmp_path):

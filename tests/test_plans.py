@@ -524,10 +524,10 @@ def test_ivfpq_topk_single_cell_exchange_no_joins(spark):
 
 
 def test_packed_linking_is_map_only(spark):
-    """Entity linking's packed strategy: one broadcast hash join + an
-    in-row argmax fold — the 10^12-row mention table must NOT shuffle
-    (the legacy broadcast strategy pays a full occurrence-keyed
-    exchange for its max_by), and since the dictionary is packed on
+    """Entity linking: one broadcast hash join + an in-row argmax
+    fold — the 10^12-row mention table must NOT shuffle (a max_by
+    aggregation would pay a full occurrence-keyed exchange), and
+    since the dictionary is packed on
     the driver, no exchange at all besides the broadcast of that
     LocalRelation: no groupBy over the dictionary stays in the plan."""
     import re
@@ -787,8 +787,8 @@ def test_r5s9_new_op_plan_shapes(spark, docs):
 
 
 def test_driver_held_tables_plan_as_local_relations(spark, tmp_path):
-    """Tables the driver already holds (flat and driver-packed symbol
-    dictionaries, the corpus symbol table built on the driver from
+    """Tables the driver already holds (the driver-packed symbol
+    dictionary, the corpus symbol table built on the driver from
     class_decl pairs, the driver-path CC map, empty-stage readers) must
     plan as an Arrow-backed LocalRelation: a PythonRDD / LogicalRDD
     source would start Python workers in a job of its own only to
@@ -799,8 +799,7 @@ def test_driver_held_tables_plan_as_local_relations(spark, tmp_path):
         connected_components
     from propertygraph_spark.pipeline.fixtures import DOCS_SCHEMA
     from propertygraph_spark.pipeline.linking import (
-        SYMTAB_SCHEMA, packed_symbol_dictionary, symbol_dictionary,
-        symbol_table_rows)
+        SYMTAB_SCHEMA, packed_symbol_dictionary, symbol_table_rows)
     from propertygraph_spark.pipeline.materialize import (
         extract_incremental, write_stage_buckets)
     from propertygraph_spark.pipeline.session import local_frame
@@ -816,7 +815,6 @@ def test_driver_held_tables_plan_as_local_relations(spark, tmp_path):
     empty = spark.createDataFrame([], "doc_id long, bucket long")
     no_docs = spark.createDataFrame([], DOCS_SCHEMA)
     tables = {
-        "symbol_dictionary": symbol_dictionary(spark),
         "packed_dictionary": packed_symbol_dictionary(spark),
         "symbol_table": symtab,
         "cc_driver_path": connected_components(edges),

@@ -998,6 +998,71 @@ def test_streaming_upsert_sink_keys_buckets_beside_doc_id(spark, tmp_path):
     assert got.exceptAll(by_doc).count() > 0
 
 
+def test_streaming_upsert_sink_bootstrap_is_a_merge(spark, tmp_path):
+    """The first micro-batch is a MERGE into an empty stage like every
+    later one: a delete row for a key that is not there deletes
+    nothing, and the table equals a batch MERGE of the same rows."""
+    import json
+
+    from propertygraph_spark.pipeline.materialize import (
+        merge_stage_buckets, snapshot_history)
+    from propertygraph_spark.streaming.events import streaming_upsert_sink
+
+    schema = "k long, val string, is_del boolean"
+    rows = [(1, "a1", False), (2, "b1", False), (9, "gone", True)]
+    src = str(tmp_path / "src.parquet")
+    out = str(tmp_path / "table")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    q = streaming_upsert_sink(spark.readStream.schema(schema).parquet(src),
+                              out, str(tmp_path / "ck"), ["k"],
+                              delete_col="is_del", n_buckets=4)
+    q.awaitTermination(60)
+    merged = str(tmp_path / "merged")
+    merge_stage_buckets(spark, merged, spark.createDataFrame(rows, schema),
+                        ["k"], delete_col="is_del", n_buckets=4,
+                        bucket_from="k")
+
+    def table(path):
+        with open(os.path.join(path, "_buckets.json")) as f:
+            buckets = sorted(json.load(f))
+        return buckets, sorted(
+            tuple(r) for r in
+            spark.read.parquet(path).select("k", "val", "bucket").collect())
+
+    assert table(out) == table(merged)
+    assert {k for k, _v, _b in table(out)[1]} == {1, 2}
+    assert [s["operation"] for s in snapshot_history(out)] == [
+        "merge", "streaming-upsert"]
+
+
+def test_streaming_upsert_sink_empty_first_batch(spark, tmp_path):
+    """An empty first micro-batch merges nothing and leaves only its
+    ledger entry; the next batch then merges into the still-empty
+    stage."""
+    import time as _t
+
+    from propertygraph_spark.pipeline.materialize import snapshot_history
+    from propertygraph_spark.streaming.events import streaming_upsert_sink
+
+    schema = "k long, val string"
+    src = str(tmp_path / "src.parquet")
+    out = str(tmp_path / "table")
+    for rows in ([], [(1, "a1"), (2, "b1")]):
+        spark.createDataFrame(rows, schema).coalesce(1) \
+            .write.mode("append").parquet(src)
+        _t.sleep(1.1)
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    q = streaming_upsert_sink(stream, out, str(tmp_path / "ck"), ["k"],
+                              n_buckets=4)
+    q.awaitTermination(60)
+    assert {(r["k"], r["val"]) for r in spark.read.parquet(out).collect()} \
+        == {(1, "a1"), (2, "b1")}
+    assert [(s["operation"], s.get("batch_id"))
+            for s in snapshot_history(out)] == [
+        ("streaming-upsert", 0), ("merge", None), ("streaming-upsert", 1)]
+
+
 def test_streaming_upsert_sink_bootstrap_rejects_duplicate_keys(spark,
                                                                 tmp_path):
     """The bootstrap micro-batch runs MERGE's cardinality check too: two
